@@ -21,33 +21,11 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.hints import broadcast_bounded, broadcast_small as bcast
 from ..registry import spark_query
+from ..session import derived
 from ..sources import load_table
 
 _PR_ITERS = 3
 _DAMP = 0.85
-
-# Normalized transition table per (session, sf_dir): the edge build
-# (fact self-join + two aggregations) is the expensive invariant part
-# of any graph query over the same snapshot; cached once and cleared
-# by session.clear_derived_caches like the ALS/bias-pipeline caches.
-_TRANSITION_CACHE: dict[str, tuple[DataFrame, int]] = {}
-
-# Support->=2 undirected edge table per (session, sf_dir): the
-# min-support co-purchase graph underlying q_graph_triangles,
-# q_link_prediction_adamic, and q_recursive_bfs — each previously
-# re-ran the identical lineitem self-join + aggregation (r6 VERDICT #4
-# budget work).  Checkpointed once; cleared with the caches above.
-_SUPPORT2_CACHE: dict[str, DataFrame] = {}
-
-# Directed co-purchase pair counts (src, dst, w) per (session, sf_dir)
-# — the ONE lineitem self-join every graph query's edge table derives
-# from (r7 budget work: pagerank's weighted edges and the support>=2
-# family each ran their own identical self-join per sweep).  The
-# symmetric directed count for (u, v) with u < v IS the undirected
-# co-order support, so support2_edges is a filter over this table,
-# not a second shuffle.
-_PAIR_CACHE: dict[str, DataFrame] = {}
-
 
 # Deterministic per-order fan-out cap for the pair-count self-join
 # (r7 VERDICT #4): one pathological order with L lines would otherwise
@@ -101,27 +79,29 @@ def cap_distinct_items(items: DataFrame, cap: int = SKEW_LINE_CAP) -> DataFrame:
     )
 
 
+@derived
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cached) directed co-purchase pair counts: parts appearing in
-    the same order, weighted by co-occurrence count.  The self-join is
-    blocked by l_orderkey and the per-order fan-out is bounded by
-    ``cap_order_lines`` (CAP·(CAP−1) rows max per key — the 100 TB
+    """(memoized) directed co-purchase pair counts (src, dst, w): parts
+    appearing in the same order, weighted by co-occurrence count — the
+    ONE lineitem self-join every graph query's edge table derives from
+    (r7 budget work: pagerank's weighted edges and the support>=2
+    family each ran their own identical self-join per sweep).  The
+    symmetric directed count for (u, v) with u < v IS the undirected
+    co-order support, so support2_edges is a filter over this table,
+    not a second shuffle.  The self-join is blocked by l_orderkey and
+    the per-order fan-out is bounded by ``cap_order_lines``
+    (CAP·(CAP−1) rows max per key — the 100 TB
     giant-order guard, r7 VERDICT #4).  persist(MEMORY_AND_DISK), not
     localCheckpoint (r7 ADVICE): every graph query multi-reads its
     derivation so the build must materialize once, but this table is
     the session's largest pinned intermediate — persist keeps the
     (shallow) lineage, so blocks spill to disk under memory pressure
     and an executor loss recomputes instead of invalidating every
-    derived graph query; clear_derived_caches unpersists it."""
-    key = f"{id(spark)}:{sf_dir}"
-    if key in _PAIR_CACHE:
-        return _PAIR_CACHE[key]
+    derived graph query."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_linenumber"
     )
-    pairs = _build_pair_counts(li).persist(StorageLevel.MEMORY_AND_DISK)
-    _PAIR_CACHE[key] = pairs
-    return pairs
+    return _build_pair_counts(li).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _build_pair_counts(li: DataFrame) -> DataFrame:
@@ -225,11 +205,15 @@ def _build_pair_counts(li: DataFrame) -> DataFrame:
     )
 
 
+@derived
 def support2_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cached) undirected (u < v) part co-purchase edges with >= 2
-    co-order support — the shared signal graph of the three consumers
-    above.  Derived by a filter over the shared pair-count table: the
-    directed count of (u, v) with u < v equals the undirected co-order
+    """(memoized) undirected (u < v) part co-purchase edges with >= 2
+    co-order support — the shared signal graph of q_graph_triangles,
+    q_link_prediction_adamic and q_recursive_bfs, each of which used
+    to re-run the identical lineitem self-join + aggregation (r6
+    VERDICT #4 budget work).  Derived by a filter over the shared
+    pair-count table: the directed count of (u, v) with u < v equals
+    the undirected co-order
     support exactly (each co-occurring line pair contributes one count
     to each direction), so no second self-join runs.  Persisted, not
     localCheckpointed (the fault-tolerance half of r7 ADVICE #2): the
@@ -239,17 +223,12 @@ def support2_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer per sweep re-scanning the 1.2M-row parent (triangles
     1.6→2.7 s, adamic 1.2→2.0 s as a lazy view), multiplied by the
     recursive-BFS executor re-reading the view every step."""
-    key = f"{id(spark)}:{sf_dir}"
-    if key in _SUPPORT2_CACHE:
-        return _SUPPORT2_CACHE[key]
-    und = (
+    return (
         _pair_counts(spark, sf_dir)
         .filter((F.col("src") < F.col("dst")) & (F.col("w") >= 2))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SUPPORT2_CACHE[key] = und
-    return und
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,18 +237,18 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pair_counts(spark, sf_dir)
 
 
+@derived
 def _transitions(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
-    """(cached) transition-probability table (src, dst, p), node table
-    (one row per src), and node count for the co-purchase graph.
+    """(memoized) transition-probability table (src, dst, p), node table
+    (one row per src), and node count for the co-purchase graph.  The
+    edge build (fact self-join + two aggregations) is the expensive
+    invariant part of any graph query over the same snapshot.
 
     r12: the node set IS ``outw``'s key set (one row per src by
     construction), so it is cached and counted directly — the old
     shape re-derived it with a distinct() shuffle over the 2.4M-row
     cached transition table, a full extra exchange per sweep (guide
     §2.4: a distinct on data that is already unique)."""
-    key = f"{id(spark)}:{sf_dir}"
-    if key in _TRANSITION_CACHE:
-        return _TRANSITION_CACHE[key]
     edges = _edges(spark, sf_dir)
     outw = edges.groupBy("src").agg(F.sum("w").alias("totw")).cache()
     e = (
@@ -279,9 +258,7 @@ def _transitions(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         )
         .cache()
     )
-    n = outw.count()
-    _TRANSITION_CACHE[key] = (e, outw, n)
-    return _TRANSITION_CACHE[key]
+    return e, outw, outw.count()
 
 
 def _pagerank_oracle() -> str:

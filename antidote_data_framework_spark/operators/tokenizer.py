@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import spark_query
+from ..session import derived
 from ..sources import load_table
 
 _BPE_ITERS = 3
@@ -69,24 +70,16 @@ w{t + 1} AS (
     return prelude + "," + ",".join(parts) + "\n" + final + "\nORDER BY iteration"
 
 
-# One BPE merge-learning run per (session, sf_dir) — q_bpe_merges and
-# q_bpe_encode both need the identical loop output (the final vocab
-# symbol strings + the learned merge list), and each used to re-pay
-# the corpus aggregation plus the 3-iteration argmax/fuse chain.
-# Same registry pattern as neighbors_cf._SIMS_CACHE; cleared between
-# bench sweeps by session.clear_derived_caches so sweeps start cold.
-_BPE_CACHE: dict[str, tuple] = {}
-
-
+@derived
 def _learn_bpe(spark: SparkSession, sf_dir: str):
     """Run the merge-learning loop; returns (vocab, learned): vocab
     (tok, r, c) carries each word's FINAL space-delimited symbol
-    string after all merges (cached per (session, sf_dir) — see
-    ``_BPE_CACHE``), learned is the [(iteration, pair, merged, count)]
-    list."""
-    key = f"{id(spark)}:{sf_dir}"
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
+    string after all merges (cached), learned is the
+    [(iteration, pair, merged, count)] list.
+
+    Memoized per session: q_bpe_merges and q_bpe_encode both need the
+    identical loop output, and each used to re-pay the corpus
+    aggregation plus the 3-iteration argmax/fuse chain."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -136,8 +129,7 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
         w_next.count()
         w.unpersist()
         w = w_next
-    _BPE_CACHE[key] = (w, learned)
-    return _BPE_CACHE[key]
+    return w, learned
 
 
 @spark_query("q_bpe_merges", oracle=_bpe_oracle_sql())
@@ -157,8 +149,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB — canonical BPE's count-then-merge-all-positions with the
     same greedy order."""
     _vocab, learned = _learn_bpe(spark, sf_dir)
-    # NOTE: _vocab stays cached for q_bpe_encode (see _BPE_CACHE);
-    # clear_derived_caches unpersists it between bench sweeps.
+    # NOTE: _vocab stays cached for q_bpe_encode (see _learn_bpe).
     return spark.createDataFrame(
         learned, "iteration INT, pair STRING, merged STRING, pair_count BIGINT"
     )

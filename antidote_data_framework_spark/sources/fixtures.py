@@ -30,9 +30,11 @@ TABLES = (
 
 
 # DataFrame HANDLES (lazy plans, not materialized data) per
-# (session, sf_dir, table): avoids re-listing files + re-reading parquet
-# footers on every one of the ~200 load_table calls in a bench run.
-_DF_CACHE: dict[str, DataFrame] = {}
+# (applicationId, sf_dir, table): avoids re-listing files + re-reading
+# parquet footers on every one of the ~200 load_table calls in a bench
+# run.  Keyed like session.derived, so a new session never gets a handle
+# bound to a stopped context.
+_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -69,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a single timestamp type whatever the fixtures contain."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table: {name}")
-    key = f"{id(spark)}:{sf_dir}:{name}"
+    key = (spark.sparkContext.applicationId, sf_dir, name)
     if key in _DF_CACHE:
         return _DF_CACHE[key]
     _ensure_session_confs(spark)

@@ -5,21 +5,15 @@ may not invent wrong ones."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from antidote_data_framework_spark.ml.als import (
     _als_fit_cached,
     q_als_recommend_ann,
 )
-from antidote_data_framework_spark.ml.recsys_data import is_train, ratings_df
 from tests.conftest import SF_DIR
 
 
 def test_ann_topk_recall_vs_exact(spark):
-    r = ratings_df(spark, SF_DIR)
-    model = _als_fit_cached(
-        spark, SF_DIR, r.filter(is_train(F.col("user_id"), F.col("item_id")))
-    )
+    model, _n_train = _als_fit_cached(spark, SF_DIR)
     exact = {
         (row["user_id"], rec["item_id"])
         for row in model.recommendForAllUsers(3).collect()

@@ -54,3 +54,17 @@ def test_random_heavy_duplication():
         # and dense floats (no ties) for the common path
         S = rng.standard_normal((64, m))
         assert (_top3_stable(S) == _ref(S)).all()
+
+
+def test_ann_scratch_holds_one_buffer():
+    """A long-lived worker keeps at most ONE 2048 x M score buffer: a
+    new M replaces the old buffer instead of adding a second one."""
+    import weakref
+
+    from antidote_data_framework_spark.ml import als
+
+    old = weakref.ref(als._ann_scratch(5))
+    buf = als._ann_scratch(7)
+    assert buf.shape == (2048, 7)
+    assert als._ann_scratch(7) is buf, "same M must reuse the buffer"
+    assert old() is None, "the M=5 buffer must be released when M changes"

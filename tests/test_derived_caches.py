@@ -7,7 +7,9 @@ clear_derived_caches really evicts them, so bench sweeps start cold;
 (c) the slope-one upper-triangle rewrite is value-identical to the
 naive both-directions build (the IEEE sign-symmetry claim in
 ml/neighbors_cf.py); (d) the streaming listener's terminated-run set
-stays bounded when nobody drains (r6 ADVICE #4).
+stays bounded when nobody drains (r6 ADVICE #4); (e) the
+session.derived memo itself: identity on a hit, unpersist on clear,
+and a key that follows the applicationId, not the session object.
 """
 
 from __future__ import annotations
@@ -16,23 +18,78 @@ import os
 
 from pyspark.sql import functions as F
 
-from antidote_data_framework_spark.ml import neighbors_cf
 from antidote_data_framework_spark.ml.neighbors_cf import MIN_CO, _item_sims
-from antidote_data_framework_spark.session import clear_derived_caches
+from antidote_data_framework_spark.session import (
+    _DERIVED,
+    clear_derived_caches,
+    derived,
+)
 from antidote_data_framework_spark.streaming.stream_queries import (
     _InputRowsListener,
 )
 
 
+def test_derived_memo_shares_by_identity_and_clear_unpersists(spark):
+    """The memo itself: one build per key, the SAME object on a hit,
+    and clear_derived_caches unpersists a DataFrame held inside a
+    tuple value before the next call rebuilds."""
+    calls = []
+
+    @derived
+    def build(spark, sf_dir):
+        calls.append(sf_dir)
+        return spark.range(3).cache(), 7, [1]
+
+    clear_derived_caches(spark)
+    first = build(spark, "sf")
+    assert build(spark, "sf") is first
+    assert calls == ["sf"]
+    df = first[0]
+    assert df.storageLevel.useMemory
+    clear_derived_caches(spark)
+    assert not _DERIVED
+    assert not df.storageLevel.useMemory, "clear must unpersist tuple members"
+    rebuilt = build(spark, "sf")
+    assert rebuilt is not first, "clear must force a rebuild"
+    assert calls == ["sf", "sf"]
+    clear_derived_caches(spark)
+
+
+def test_derived_memo_keys_on_application_id(spark):
+    """The key is the SparkContext's applicationId, not the session
+    object: two distinct session objects of one application share an
+    entry, another application misses."""
+    from types import SimpleNamespace
+
+    def fake_session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    calls = []
+
+    @derived
+    def build(spark, sf_dir):
+        calls.append(spark)
+        return object()
+
+    a1, a2, b = fake_session("app-a"), fake_session("app-a"), fake_session("app-b")
+    try:
+        first = build(a1, "sf")
+        assert build(a2, "sf") is first
+        assert build(b, "sf") is not first
+        assert calls == [a1, b]
+    finally:
+        clear_derived_caches(spark)
+
+
 def test_item_sims_cached_per_session_and_cleared(spark, sf_dir):
     clear_derived_caches(spark)
-    assert not neighbors_cf._SIMS_CACHE
+    assert not _DERIVED
     first = _item_sims(spark, sf_dir)
     again = _item_sims(spark, sf_dir)
     assert again is first, "second consumer must ride the cached model"
     assert first.storageLevel.useMemory, "cached model must be persisted"
     clear_derived_caches(spark)
-    assert not neighbors_cf._SIMS_CACHE
+    assert not _DERIVED
     rebuilt = _item_sims(spark, sf_dir)
     assert rebuilt is not first, "clear must force a cold rebuild"
     clear_derived_caches(spark)
@@ -46,14 +103,14 @@ def test_bpe_learn_cached_per_session_and_cleared(spark, sf_dir):
     from antidote_data_framework_spark.operators import tokenizer
 
     clear_derived_caches(spark)
-    assert not tokenizer._BPE_CACHE
+    assert not _DERIVED
     vocab1, learned1 = tokenizer._learn_bpe(spark, sf_dir)
     vocab2, learned2 = tokenizer._learn_bpe(spark, sf_dir)
     assert vocab2 is vocab1, "second consumer must ride the cached vocab"
     assert learned2 is learned1
     assert vocab1.storageLevel.useMemory, "cached vocab must be persisted"
     clear_derived_caches(spark)
-    assert not tokenizer._BPE_CACHE
+    assert not _DERIVED
     vocab3, learned3 = tokenizer._learn_bpe(spark, sf_dir)
     assert vocab3 is not vocab1, "clear must force a cold rebuild"
     assert learned3 == learned1, "relearned merges must be identical"
@@ -195,7 +252,7 @@ def test_bias_discrepancies_cached_cleared_and_value_identical(spark, sf_dir):
     from antidote_data_framework_spark.ml import metrics, recsys_data
 
     clear_derived_caches(spark)
-    assert not recsys_data._DISC_CACHE
+    assert not _DERIVED
     first = recsys_data.bias_discrepancies(spark, sf_dir)
     again = recsys_data.bias_discrepancies(spark, sf_dir)
     assert again is first, "second metric must ride the cached table"
@@ -207,7 +264,7 @@ def test_bias_discrepancies_cached_cleared_and_value_identical(spark, sf_dir):
     assert via_cache == uncached
 
     clear_derived_caches(spark)
-    assert not recsys_data._DISC_CACHE
+    assert not _DERIVED
     rebuilt = recsys_data.bias_discrepancies(spark, sf_dir)
     assert rebuilt is not first, "clear must force a cold rebuild"
     clear_derived_caches(spark)

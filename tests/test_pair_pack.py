@@ -76,8 +76,8 @@ def test_pack_bijective_at_range_edges(spark):
 
 
 def test_packable_guard_reads_the_fixture(spark, sf_dir):
-    from antidote_data_framework_spark.ml import neighbors_cf
+    from antidote_data_framework_spark.session import clear_derived_caches
 
-    neighbors_cf._PACKABLE_CACHE.clear()
+    clear_derived_caches(spark)
     assert _pair_key_packable(spark, sf_dir) is True  # fixture partkeys are small
-    neighbors_cf._PACKABLE_CACHE.clear()
+    clear_derived_caches(spark)

@@ -308,7 +308,9 @@ def test_python_fold_stage_keeps_parallelism(spark):
     )
     folded.collect()  # materialize so AQE fixes the stage partitioning
     n = folded.rdd.getNumPartitions()
-    assert n > 4, f"Python fold stage coalesced to {n} partition(s)"
+    # full fan-out on small hosts, more than 4 partitions on big ones
+    want = min(5, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert n >= want, f"Python fold stage coalesced to {n} partition(s)"
     # the production holt FOLD stage (mapInPandas over
     # repartition(user), before the final tiny-output orderBy — which
     # legitimately coalesces ~1.5k rows to one partition) must keep
@@ -327,7 +329,7 @@ def test_python_fold_stage_keeps_parallelism(spark):
         )
     )
     hp.collect()
-    assert hp.rdd.getNumPartitions() > 4
+    assert hp.rdd.getNumPartitions() >= want
 
 
 def test_chunk_rewrite_plan_shape(spark, sf_dir):
