@@ -2,9 +2,10 @@
 core behind the O-34..O-38 queries (paper §5; Yao & Huang NeurIPS'17).
 
 Every function takes a long-format prediction DataFrame
-``pred(user_id, item_id, rating, pred)`` and returns a 1-row
-DataFrame; the query layer binds them to the engine's bias-model (or
-any other) predictor.  Keeping the metric algebra predictor-agnostic
+``pred(user_id, item_id, rating, pred)`` — or, for the three per-item
+Yao-Huang metrics, its ``grouped_discrepancies`` table — and returns a
+1-row DataFrame; the query layer binds them to the engine's bias-model
+(or any other) predictor.  Keeping the metric algebra predictor-agnostic
 is what lets the antidote loop swap in ALS predictions and the test
 suite feed hand-built fixtures (clone-group ⇒ zero-unfairness, etc.).
 """
@@ -43,39 +44,34 @@ def grouped_discrepancies(pred: DataFrame) -> DataFrame:
     return g0.join(g1, "item_id")
 
 
-def fairness_value(pred: DataFrame, decimals: int = 6, disc: DataFrame | None = None) -> DataFrame:
+def fairness_value(disc: DataFrame, decimals: int = 6) -> DataFrame:
     """U_val = mean_j |(Ey0−Er0) − (Ey1−Er1)| [YH §3].
 
-    ``disc`` lets a caller pass a pre-materialized
-    ``grouped_discrepancies`` frame: the three per-item Yao-Huang
-    metrics aggregate the IDENTICAL discrepancy table, so a session
-    that runs them together computes it once (see
+    ``disc`` is a ``grouped_discrepancies`` table: the three per-item
+    Yao-Huang metrics aggregate the IDENTICAL discrepancy table, so a
+    session that runs them together computes it once (see
     recsys_data.bias_discrepancies) instead of re-running the
-    groupBy + self-join per metric.  Same plan, same rows — only the
-    materialization point moves."""
-    d = disc if disc is not None else grouped_discrepancies(pred)
+    groupBy + self-join per metric."""
     term = F.abs((F.col("ey0") - F.col("er0")) - (F.col("ey1") - F.col("er1")))
-    return d.agg(
+    return disc.agg(
         F.round(F.avg(term), decimals).alias("value_unfairness"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
 
-def fairness_absolute(pred: DataFrame, decimals: int = 6, disc: DataFrame | None = None) -> DataFrame:
+def fairness_absolute(disc: DataFrame, decimals: int = 6) -> DataFrame:
     """U_abs = mean_j ||Ey0−Er0| − |Ey1−Er1|| [YH §3]."""
-    d = disc if disc is not None else grouped_discrepancies(pred)
     term = F.abs(
         F.abs(F.col("ey0") - F.col("er0")) - F.abs(F.col("ey1") - F.col("er1"))
     )
-    return d.agg(
+    return disc.agg(
         F.round(F.avg(term), decimals).alias("absolute_unfairness"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
 
-def fairness_under_over(pred: DataFrame, decimals: int = 6, disc: DataFrame | None = None) -> DataFrame:
+def fairness_under_over(disc: DataFrame, decimals: int = 6) -> DataFrame:
     """U_under / U_over — the max(0,·)-clamped one-sided variants [YH §3]."""
-    d = disc if disc is not None else grouped_discrepancies(pred)
     zero = F.lit(0.0)
     under = F.abs(
         F.greatest(zero, F.col("er0") - F.col("ey0"))
@@ -85,7 +81,7 @@ def fairness_under_over(pred: DataFrame, decimals: int = 6, disc: DataFrame | No
         F.greatest(zero, F.col("ey0") - F.col("er0"))
         - F.greatest(zero, F.col("ey1") - F.col("er1"))
     )
-    return d.agg(
+    return disc.agg(
         F.round(F.avg(under), decimals).alias("under_unfairness"),
         F.round(F.avg(over), decimals).alias("over_unfairness"),
         F.count(F.lit(1)).alias("n_items"),

@@ -224,9 +224,7 @@ def q_fairness_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     |(Ey_0 − Er_0) − (Ey_1 − Er_1)| — signed over/under-estimation
     inconsistency between groups [YH §3].  The three per-item YH
     metrics aggregate one shared, cached discrepancy table (r12)."""
-    return metrics.fairness_value(
-        bias_predictions(spark, sf_dir), disc=bias_discrepancies(spark, sf_dir)
-    )
+    return metrics.fairness_value(bias_discrepancies(spark, sf_dir))
 
 
 @spark_query(
@@ -241,9 +239,7 @@ FROM both_grps
 def q_fairness_absolute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absolute unfairness U_abs: ||Ey_0−Er_0| − |Ey_1−Er_1|| averaged
     over items — error-magnitude gap, sign-blind [YH §3]."""
-    return metrics.fairness_absolute(
-        bias_predictions(spark, sf_dir), disc=bias_discrepancies(spark, sf_dir)
-    )
+    return metrics.fairness_absolute(bias_discrepancies(spark, sf_dir))
 
 
 @spark_query(
@@ -259,9 +255,7 @@ FROM both_grps
 def q_fairness_under_over(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Underestimation and overestimation unfairness U_under / U_over:
     the clamped (max(0,·)) one-sided variants, both in one row [YH §3]."""
-    return metrics.fairness_under_over(
-        bias_predictions(spark, sf_dir), disc=bias_discrepancies(spark, sf_dir)
-    )
+    return metrics.fairness_under_over(bias_discrepancies(spark, sf_dir))
 
 
 @spark_query(

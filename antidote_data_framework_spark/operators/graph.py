@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.hints import broadcast_bounded, broadcast_small as bcast
+from ..functions.pairs import fits_pair_key, pack_pair, unpack_pair
 from ..registry import spark_query
 from ..session import derived
 from ..sources import load_table
@@ -154,39 +155,32 @@ def _build_pair_counts(li: DataFrame) -> DataFrame:
         ).alias("ls")
     )
     parts_arr = F.transform("ls", lambda s: s["l_partkey"])
-    # Packed pair key when every part id fits 31 bits (r13, same
-    # physical-plan choice as neighbors_cf._pair_agg and measured the
-    # same direction): the ordered pair (a, b) is emitted as ONE long
-    # (a << 32) | b, so the explode output, the aggregation hash key
-    # and the shuffle rows carry one word instead of a two-field
-    # struct.  The id bounds ride the SAME job as the giant-order
-    # check above (zero extra passes).  Out-of-range ids keep the
-    # struct-pair path; the pair multiset is identical either way
-    # (test-pinned in tests/test_graph_skew_cap.py).
-    packable = (
-        bounds["mn"] is not None
-        and int(bounds["mn"]) >= 0
-        and int(bounds["mx"]) < 2**31
-    )
-    if packable:
+    # Packed pair key when every part id fits the packed format (r13;
+    # the format and its bound live in functions/pairs.py, shared with
+    # item-CF's pair aggregation, and measured the same direction):
+    # the ordered pair (a, b) is emitted as ONE long, so the explode
+    # output, the aggregation hash key and the shuffle rows carry one
+    # word instead of a two-field struct.  The id bounds ride the SAME
+    # job as the giant-order check above (zero extra passes).
+    # Out-of-range ids keep the struct-pair path; the pair multiset is
+    # identical either way (test-pinned in tests/test_graph_skew_cap.py
+    # and tests/test_pair_pack.py).
+    if fits_pair_key(bounds["mn"], bounds["mx"]):
         pair_keys = F.flatten(
             F.transform(
                 parts_arr,
                 lambda a: F.transform(
                     F.filter(parts_arr, lambda b: a != b),
-                    lambda b: F.shiftleft(a, 32).bitwiseOR(b),
+                    lambda b: pack_pair(a, b),
                 ),
             )
         )
+        src, dst = unpack_pair("k")
         return (
             capped.select(F.explode(pair_keys).alias("k"))
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("w"))
-            .select(
-                F.shiftrightunsigned("k", 32).alias("src"),
-                F.col("k").bitwiseAND(F.lit(0xFFFFFFFF)).alias("dst"),
-                "w",
-            )
+            .select(src.alias("src"), dst.alias("dst"), "w")
         )
     pair_structs = F.flatten(
         F.transform(

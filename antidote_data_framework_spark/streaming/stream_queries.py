@@ -153,157 +153,6 @@ def _stage_events(
 _STREAM_SHUFFLE_PARTITIONS = "8"
 
 
-from pyspark.sql.streaming import StreamingQueryListener
-
-
-class _InputRowsListener(StreamingQueryListener):
-    """Exact per-run input-row accounting via the StreamingQueryListener
-    bus (r5 VERDICT #3): summing ``q.recentProgress`` is a ring buffer
-    capped at spark.sql.streaming.numRecentProgressUpdates (default
-    100) — with maxFilesPerTrigger=1 and >100 staged files it silently
-    undercounts.  The listener sees EVERY progress event, so the total
-    is exact at any batch count.  Events arrive asynchronously after
-    ``awaitTermination``; the listener bus dispatches one event at a
-    time in post order, so once the run's QueryTerminatedEvent has been
-    observed every progress event for that run has already been
-    counted — ``drain`` blocks on a Condition the bus callbacks notify
-    (r6 VERDICT #4: the old 0.05 s poll + 0.5 s settle sleep charged
-    every run a fixed drain tax; event-driven wake makes the
-    terminated path cost one context switch).  The stability fallback
-    (counter unchanged for ``settle`` seconds) remains only for runs
-    that never terminate inside the timeout.  A pure settle poll is a
-    race under CPU load: a listener thread lagging >settle behind the
-    driver made a 110-batch run read 109 (observed under a fully
-    loaded local[32]).
-
-    Terminated runs nobody drains are EVICTED once more than
-    ``_MAX_UNDRAINED`` of them accumulate (r6 ADVICE: the listener is
-    session-global and counts every streaming query, so undrained
-    counters grew unboundedly over a long session)."""
-
-    _MAX_UNDRAINED = 64
-
-    def __init__(self) -> None:
-        import collections
-        import threading
-
-        self._cv = threading.Condition()
-        self.rows_by_run: dict[str, int] = {}
-        self.terminated: set[str] = set()
-        self._terminated_order: collections.deque[str] = collections.deque()
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        key = str(p.runId)
-        with self._cv:
-            self.rows_by_run[key] = self.rows_by_run.get(key, 0) + int(
-                p.numInputRows
-            )
-            self._cv.notify_all()
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        key = str(event.runId)
-        with self._cv:
-            self.terminated.add(key)
-            self._terminated_order.append(key)
-            # Bounded memory: evict the oldest terminated runs that
-            # were never drained (drain() removes a run from
-            # ``terminated``, so drained runs are skipped here).
-            while len(self._terminated_order) > self._MAX_UNDRAINED:
-                old = self._terminated_order.popleft()
-                if old in self.terminated:
-                    self.terminated.discard(old)
-                    self.rows_by_run.pop(old, None)
-            self._cv.notify_all()
-
-    def drain(self, run_id: str, settle: float = 0.5, timeout: float = 60.0) -> int:
-        import time
-
-        deadline = time.monotonic() + timeout
-        with self._cv:
-            last = self.rows_by_run.get(run_id, -1)
-            stable_since = time.monotonic()
-            while run_id not in self.terminated:
-                now = time.monotonic()
-                if now >= deadline:
-                    break
-                cur = self.rows_by_run.get(run_id, -1)
-                if cur != last:
-                    last, stable_since = cur, now
-                elif cur >= 0 and now - stable_since >= settle:
-                    break  # stability fallback: run never terminated
-                # Wake immediately on any bus event; cap the wait so
-                # the stability clause above gets re-evaluated.
-                self._cv.wait(min(deadline - now, settle))
-            self.terminated.discard(run_id)
-            return self.rows_by_run.pop(run_id, 0)
-
-
-# Installed lazily, once per SparkSession (the bus is session-global).
-_input_rows_listener: _InputRowsListener | None = None
-
-
-def _ensure_input_rows_listener(spark: SparkSession) -> _InputRowsListener:
-    global _input_rows_listener
-    if _input_rows_listener is None:
-        _input_rows_listener = _InputRowsListener()
-        spark.streams.addListener(_input_rows_listener)
-    return _input_rows_listener
-
-
-def detach_listeners(spark: SparkSession) -> None:
-    """Detach the session-global StreamingQueryListener (shutdown hygiene).
-
-    A Python StreamingQueryListener is backed by a py4j callback server in
-    THIS process.  If the interpreter exits while the JVM's AsyncEventQueue
-    is still dispatching listener events, the JVM logs a full
-    ``CallbackClient ... Connection refused`` stack trace to stderr — which
-    destroyed the round-9 bench artifact (the driver's 2000-char tail
-    capture saw only the trace, never the headline JSON).  Harnesses that
-    print machine-parsed output last (bench.py, oracle sweeps) must call
-    this, then ``spark.stop()``, BEFORE printing.
-    """
-    global _input_rows_listener
-    if _input_rows_listener is not None:
-        try:
-            spark.streams.removeListener(_input_rows_listener)
-        except Exception:
-            pass  # session already gone — nothing left to detach from
-        _input_rows_listener = None
-
-
-def listener_bus_dropped_events(spark: SparkSession) -> dict[str, int]:
-    """Per-queue dropped-event counts from the JVM LiveListenerBus
-    metric registry (``queue.<name>.numDroppedEvents``).
-
-    Spark's AsyncEventQueue DROPS events on overflow (default capacity
-    10k) instead of blocking the driver — so any accounting derived
-    from listener callbacks (e.g. ``_InputRowsListener``) is only
-    exact while this reads 0 for the relevant queue.  r10 VERDICT #6:
-    silent event loss kept the checkpoint-recovery accounting bug
-    invisible for five rounds; accounting paths must check this and
-    fail LOUDLY (or void their exactness claim) when drops happened,
-    never under-count quietly."""
-    try:
-        reg = spark.sparkContext._jsc.sc().listenerBus().metrics().metricRegistry()
-        counters = reg.getCounters()
-        return {
-            str(name): int(counters[name].getCount())
-            for name in counters.keySet()
-            if str(name).endswith("numDroppedEvents")
-        }
-    except Exception:
-        # metric registry internals moved (Spark upgrade) — report
-        # "unknown" rather than a false 0-drops claim
-        return {"<unavailable>": -1}
-
-
 def _checkpoint_committed_rows(ckpt: str) -> int:
     """Total input rows across all COMMITTED batches of a file-source
     streaming checkpoint, read from the checkpoint's own metadata logs

@@ -450,25 +450,16 @@ def main() -> None:
         }
     )
 
-    # Shutdown BEFORE printing (r9 VERDICT #1): BENCH_r09 was lost because
-    # the JVM listener bus was still dispatching to the Python
-    # StreamingQueryListener when the interpreter exited — py4j dumped a
-    # >2000-char "CallbackClient ... Connection refused" stack trace to
-    # stderr AFTER the headline, and the driver's 2000-char tail capture
-    # contained no JSON at all.  Order matters: stop any active streaming
-    # queries, detach the Python listener (kills the callback route), stop
-    # the session, THEN emit the machine-parsed lines last.
+    # Shutdown BEFORE printing (r9 VERDICT #1): JVM noise written to
+    # stderr after the headline can push the JSON out of a short tail
+    # capture.  Stop any active streaming queries and the session, THEN
+    # emit the machine-parsed lines last.
     try:
         for q in spark.streams.active:
             try:
                 q.stop()
             except Exception:
                 pass
-        from antidote_data_framework_spark.streaming.stream_queries import (
-            detach_listeners,
-        )
-
-        detach_listeners(spark)
         spark.stop()
     except Exception as exc:  # shutdown noise must never cost the artifact
         print(f"bench: shutdown warning: {exc}", file=sys.stderr)

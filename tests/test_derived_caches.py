@@ -6,15 +6,12 @@ of rebuilding the co-rating pair aggregation — and (b)
 clear_derived_caches really evicts them, so bench sweeps start cold;
 (c) the slope-one upper-triangle rewrite is value-identical to the
 naive both-directions build (the IEEE sign-symmetry claim in
-ml/neighbors_cf.py); (d) the streaming listener's terminated-run set
-stays bounded when nobody drains (r6 ADVICE #4); (e) the
-session.derived memo itself: identity on a hit, unpersist on clear,
-and a key that follows the applicationId, not the session object.
+ml/neighbors_cf.py); (d) the session.derived memo itself: identity
+on a hit, unpersist on clear, and a key that follows the
+applicationId, not the session object.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -23,9 +20,6 @@ from antidote_data_framework_spark.session import (
     _DERIVED,
     clear_derived_caches,
     derived,
-)
-from antidote_data_framework_spark.streaming.stream_queries import (
-    _InputRowsListener,
 )
 
 
@@ -164,85 +158,6 @@ def test_slopeone_upper_triangle_matches_naive(spark):
     assert got == want  # exact equality, including the float deltas
 
 
-def test_listener_eviction_bounds_undrained_runs():
-    class _Evt:
-        def __init__(self, run_id):
-            self.runId = run_id
-
-    lst = _InputRowsListener()
-    n = lst._MAX_UNDRAINED + 40
-    for i in range(n):
-
-        class _Prog:
-            runId = f"run-{i}"
-            numInputRows = 7
-
-        class _PEvt:
-            progress = _Prog
-
-        lst.onQueryProgress(_PEvt())
-        lst.onQueryTerminated(_Evt(f"run-{i}"))
-    assert len(lst.terminated) <= lst._MAX_UNDRAINED
-    assert len(lst.rows_by_run) <= lst._MAX_UNDRAINED
-    # the newest runs survive; the oldest were evicted
-    assert f"run-{n-1}" in lst.terminated
-    assert "run-0" not in lst.terminated
-    # a drained run returns its exact count and is forgotten
-    assert lst.drain(f"run-{n-1}", timeout=1.0) == 7
-    assert f"run-{n-1}" not in lst.terminated
-    assert f"run-{n-1}" not in lst.rows_by_run
-
-
-def test_listener_bus_overflow_detector_fires():
-    """r10 VERDICT #6: the dropped-event detector must FIRE when the
-    listener bus overflows — silent event loss is how the
-    checkpoint-recovery accounting bug stayed invisible for five
-    rounds.  Queue capacity is a static SparkContext conf, so the
-    overflow is forced in a subprocess JVM with capacity=1: any job
-    burst then outruns the single-slot queue and Spark drops events
-    instead of blocking, which the detector must report as >0."""
-    import json
-    import subprocess
-    import sys
-    import textwrap
-
-    script = textwrap.dedent(
-        """
-        import json, sys
-        sys.path.insert(0, %r)
-        from pyspark.sql import SparkSession
-        from antidote_data_framework_spark.streaming.stream_queries import (
-            listener_bus_dropped_events,
-        )
-
-        spark = (
-            SparkSession.builder.master("local[2]")
-            .config("spark.scheduler.listenerbus.eventqueue.capacity", "1")
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.shuffle.partitions", "2")
-            .getOrCreate()
-        )
-        sc = spark.sparkContext
-        for _ in range(20):
-            sc.parallelize(range(100), 8).count()
-        drops = listener_bus_dropped_events(spark)
-        spark.stop()
-        print("DROPS=" + json.dumps(drops))
-        """
-    ) % (os.path.dirname(os.path.dirname(os.path.abspath(__file__))),)
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    line = [l for l in proc.stdout.splitlines() if l.startswith("DROPS=")][-1]
-    drops = json.loads(line[len("DROPS="):])
-    assert "<unavailable>" not in drops, "metric registry introspection broke"
-    assert sum(drops.values()) > 0, f"capacity-1 bus dropped nothing: {drops}"
-
-
 def test_bias_discrepancies_cached_cleared_and_value_identical(spark, sf_dir):
     """r12: the three per-item Yao-Huang fairness queries share one
     persisted discrepancy table.  Pins (a) cache share + eviction like
@@ -259,8 +174,8 @@ def test_bias_discrepancies_cached_cleared_and_value_identical(spark, sf_dir):
     assert first.storageLevel.useMemory, "discrepancy table must be persisted"
 
     pred = recsys_data.bias_predictions(spark, sf_dir)
-    via_cache = metrics.fairness_value(pred, disc=first).collect()
-    uncached = metrics.fairness_value(pred).collect()
+    via_cache = metrics.fairness_value(first).collect()
+    uncached = metrics.fairness_value(metrics.grouped_discrepancies(pred)).collect()
     assert via_cache == uncached
 
     clear_derived_caches(spark)

@@ -24,9 +24,10 @@ def test_fairness_zero_when_groups_are_clones(spark):
             rows.append((u, item, r + u * 0.1, p + u * 0.05))
             rows.append((u + 1, item, r + u * 0.1, p + u * 0.05))
     pred = _pred_df(spark, rows)
-    assert metrics.fairness_value(pred).first()["value_unfairness"] == 0.0
-    assert metrics.fairness_absolute(pred).first()["absolute_unfairness"] == 0.0
-    uo = metrics.fairness_under_over(pred).first()
+    disc = metrics.grouped_discrepancies(pred)
+    assert metrics.fairness_value(disc).first()["value_unfairness"] == 0.0
+    assert metrics.fairness_absolute(disc).first()["absolute_unfairness"] == 0.0
+    uo = metrics.fairness_under_over(disc).first()
     assert uo["under_unfairness"] == 0.0 and uo["over_unfairness"] == 0.0
     assert metrics.fairness_parity(pred).first()["parity_unfairness"] == 0.0
 
@@ -48,14 +49,16 @@ def test_fairness_value_hand_computed(spark):
     # one item: group0 (user 0): Ey=4, Er=3 -> disc +1
     #           group1 (user 1): Ey=2, Er=3 -> disc -1   => U_val = 2
     rows = [(0, 0, 3.0, 4.0), (1, 0, 3.0, 2.0)]
-    out = metrics.fairness_value(_pred_df(spark, rows)).first()
+    disc = metrics.grouped_discrepancies(_pred_df(spark, rows))
+    out = metrics.fairness_value(disc).first()
     assert out["value_unfairness"] == pytest.approx(2.0)
 
 
 def test_under_over_split_hand_computed(spark):
     # group0 overestimates by 1 (Ey=4, Er=3); group1 underestimates by 1.
     rows = [(0, 0, 3.0, 4.0), (1, 0, 3.0, 2.0)]
-    uo = metrics.fairness_under_over(_pred_df(spark, rows)).first()
+    disc = metrics.grouped_discrepancies(_pred_df(spark, rows))
+    uo = metrics.fairness_under_over(disc).first()
     assert uo["under_unfairness"] == pytest.approx(1.0)  # |0 - 1|
     assert uo["over_unfairness"] == pytest.approx(1.0)  # |1 - 0|
 
@@ -63,7 +66,8 @@ def test_under_over_split_hand_computed(spark):
 def test_items_missing_a_group_are_excluded(spark):
     # item 1 is rated only by group 0 -> contributes to no pairwise metric
     rows = [(0, 0, 3.0, 4.0), (1, 0, 3.0, 2.0), (0, 1, 5.0, 5.0)]
-    out = metrics.fairness_value(_pred_df(spark, rows)).first()
+    disc = metrics.grouped_discrepancies(_pred_df(spark, rows))
+    out = metrics.fairness_value(disc).first()
     assert out["n_items"] == 1
 
 

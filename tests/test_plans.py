@@ -170,6 +170,32 @@ def test_no_forced_broadcast_of_sf_proportional_tables():
         )
 
 
+def test_packed_pair_key_format_lives_in_pairs_module():
+    """The packed pair key ``(i << 32) | j`` and its ``2**31`` bound are
+    written once, in functions/pairs.py, which casts to long before the
+    shift (a hand-written ``shiftleft(i, 32)`` on an int32 column shifts
+    by 0 and merges pairs).  Any other engine file that shifts by 32 or
+    compares against 2**31 must call pack_pair / unpack_pair /
+    fits_pair_key instead."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
+    shift32 = re.compile(r"shift(left|right|rightunsigned)\(.*,\s*32\s*\)")
+    bound = re.compile(r"2\s*\*\*\s*31\b|1\s*<<\s*31\b")
+    bad: list[str] = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py.relative_to(pkg).as_posix() == "functions/pairs.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if shift32.search(line) or bound.search(line):
+                bad.append(f"{py.relative_to(pkg)}:{i}: {line.strip()}")
+    assert not bad, (
+        "packed pair-key format outside functions/pairs.py — use "
+        "pack_pair / unpack_pair / fits_pair_key:\n" + "\n".join(bad)
+    )
+
+
 def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
     """NOT EXISTS plans as LeftAnti; the global-average scalar arrives
     via a broadcast, not a shuffle."""
