@@ -319,45 +319,7 @@ def gen(point: str) -> None:
         print(f"gen[{point}]: {t} {base.num_rows} -> {out.num_rows} rows", flush=True)
 
 
-def _stage_bytes(spark, since_ms: int) -> dict[str, int]:
-    """Sum shuffle read/write and memory/disk spill bytes over every
-    stage SUBMITTED after ``since_ms``, via the status REST API
-    (r11 VERDICT #5: the scale curve measured wall-time only, so a
-    byte-level quadratic could hide under CPU-bound wall at small
-    multipliers).  Windowed by submission time so UI stage-retention
-    eviction of OLD stages can never corrupt a per-query diff."""
-    import urllib.request
-    from datetime import datetime, timezone
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return {}
-    app = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    try:
-        stages = json.loads(urllib.request.urlopen(url, timeout=10).read())
-    except Exception:
-        return {}
-    tot = {"shuffle_read": 0, "shuffle_write": 0, "spill_mem": 0, "spill_disk": 0}
-    for s in stages:
-        sub = s.get("submissionTime")
-        if not sub:
-            continue
-        # "2026-08-16T20:45:20.605GMT" -> epoch ms
-        ts = datetime.strptime(sub[:23], "%Y-%m-%dT%H:%M:%S.%f").replace(
-            tzinfo=timezone.utc
-        )
-        if ts.timestamp() * 1000 < since_ms:
-            continue
-        tot["shuffle_read"] += int(s.get("shuffleReadBytes", 0))
-        tot["shuffle_write"] += int(s.get("shuffleWriteBytes", 0))
-        tot["spill_mem"] += int(s.get("memoryBytesSpilled", 0))
-        tot["spill_disk"] += int(s.get("diskBytesSpilled", 0))
-    return tot
-
-
 def run(points: list[str]) -> None:
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")  # byte metrics source
     import __spark_entry__ as entrymod
     from antidote_data_framework_spark.session import (
         clear_derived_caches,
@@ -367,13 +329,20 @@ def run(points: list[str]) -> None:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from perfbench.spans import SparkCounters
+
     arrow_unfriendly = (T.ArrayType, T.MapType, T.StructType)
     ts_types = (T.TimestampType, T.TimestampNTZType)
     spark = get_spark("scale-checkpoint")
     qs = entrymod.queries()
     n_runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "2"))
+    # shuffle/spill bytes per run from the in-process status store
+    # (r11 VERDICT #5: the curve measured wall only, so a byte-level
+    # quadratic could hide under CPU-bound wall at small multipliers)
+    counters = SparkCounters(spark)
 
     def run_once(name: str, sf_dir: str) -> tuple[float, dict]:
+        counters.harvest()  # discard jobs that finished before this run
         t0 = time.time()
         df = qs[name](spark, sf_dir)
         if any(isinstance(f.dataType, arrow_unfriendly) for f in df.schema.fields):
@@ -393,7 +362,7 @@ def run(points: list[str]) -> None:
             ]
             df.select(cols).toPandas()
         wall = time.time() - t0
-        return wall, _stage_bytes(spark, int(t0 * 1000))
+        return wall, counters.harvest()
 
     out_path = os.path.join(HERE, "SCALE_CHECKPOINT.json")
     results: dict[str, dict] = {}
@@ -420,11 +389,9 @@ def run(points: list[str]) -> None:
             rec[sf_name] = round(best, 2) if best is not None else -1.0
             if best_bytes:
                 rec[f"shuffle_bytes_{sf_name}"] = (
-                    best_bytes["shuffle_read"] + best_bytes["shuffle_write"]
+                    best_bytes["shuffle_read_bytes"] + best_bytes["shuffle_write_bytes"]
                 )
-                rec[f"spill_bytes_{sf_name}"] = (
-                    best_bytes["spill_mem"] + best_bytes["spill_disk"]
-                )
+                rec[f"spill_bytes_{sf_name}"] = best_bytes["spill_bytes"]
             print(
                 f"{sf_name}: {name} {rec[sf_name]}s "
                 f"sh={rec.get(f'shuffle_bytes_{sf_name}', 'n/a')}",
@@ -462,7 +429,7 @@ def run(points: list[str]) -> None:
         "expects ratio_Nx <= ~N (streaming queries carry a fixed "
         "micro-batch + checkpoint floor, so their ratios read BELOW "
         "the data ratio).  shuffle/spill bytes come from the status "
-        "REST API summed over the best run's stages; bytes_flags "
+        "store summed over the best run's stages; bytes_flags "
         "lists queries whose bytes-step exceeds wall-step x1.5 AND "
         "the data multiplier (candidates for a byte-level "
         "super-linearity adjudication in BUILDLOG).",

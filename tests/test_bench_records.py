@@ -1,4 +1,4 @@
-"""Per-cpu bench record files + canary replicas (r12 VERDICT #2/#3).
+"""Per-cpu bench record files (r12 VERDICT #3).
 
 The driver's 8-core scaling run used to overwrite bench_queries.json —
 the 32-core tracker anchor — destroying the anchor and its regression
@@ -6,25 +6,13 @@ flags (it happened twice in r12).  bench.py now routes records through
 ``_record_paths``: the anchor is written ONLY by 32-core full runs,
 every other core count gets its own ``bench_queries_c<cpus>.json``,
 and comparisons never cross core counts.
-
-The mid/end-sweep canary replicas (``__canary_<class>_{mid,end}``) are
-drift METERS: they must never enter the suite total or the regression
-flags, and the position-aware normalization must pick the canary
-sample nearest each query's sweep position.
 """
 
 from __future__ import annotations
 
 import os
 
-from bench import (
-    CANARIES,
-    _REPLICA_PREFIX,
-    _class_ratio_points,
-    _nearest_ratio,
-    _record_paths,
-    _replica_keys,
-)
+from bench import _record_paths
 
 
 def test_record_paths_anchor_only_at_32_cores():
@@ -43,37 +31,3 @@ def test_record_paths_anchor_only_at_32_cores():
     assert f == os.path.join(here, "bench_queries_c8.json")
     assert prev == f
     assert "bench_queries.json" not in f
-
-
-def test_replica_keys_cover_every_class_and_position():
-    keys = _replica_keys()
-    assert set(keys.values()) == set(CANARIES)
-    for cls in CANARIES:
-        for pos in ("mid", "end"):
-            assert f"{_REPLICA_PREFIX}{cls}_{pos}" in keys
-    # reserved namespace: no registered query may collide
-    import __spark_entry__ as e
-
-    assert not any(k.startswith(_REPLICA_PREFIX) for k in e.queries())
-
-
-def test_class_ratio_points_and_nearest_position():
-    qnames = [f"q_{i}" for i in range(100)]
-    qnames[10] = CANARIES["shuffle"]  # registered canary early in sweep
-    ratios = {
-        CANARIES["shuffle"]: 1.0,
-        f"{_REPLICA_PREFIX}shuffle_mid": 1.2,
-        f"{_REPLICA_PREFIX}shuffle_end": 1.5,
-    }
-    pts = _class_ratio_points("shuffle", qnames, lambda k: ratios.get(k))
-    assert (10, 1.0) in pts  # canary's own position
-    assert (49, 1.2) in pts  # mid replica at n//2 - 1
-    assert (99, 1.5) in pts  # end replica at n - 1
-    # early query normalizes by the early sample, late by the late one
-    assert _nearest_ratio(pts, 5) == 1.0
-    assert _nearest_ratio(pts, 60) == 1.2
-    assert _nearest_ratio(pts, 95) == 1.5
-    # missing samples are dropped, not fabricated
-    pts2 = _class_ratio_points("shuffle", qnames, lambda k: None)
-    assert pts2 == []
-    assert _nearest_ratio(pts2, 50) == 1.0  # no points -> no adjustment

@@ -39,6 +39,21 @@ def test_sweep_artifact_all_green():
     assert sweep["n_failed"] == 0 and not failed, f"sweep has failures: {failed}"
 
 
+def test_sweep_artifact_records_counters():
+    """The per-key counters are the regression signal oracle_check.py
+    compares; a compare needs the setup they were measured under."""
+    from oracle_check import COUNTERS
+
+    sweep = json.loads(ARTIFACT.read_text())
+    assert sweep["cpus"] > 0 and sweep["shuffle_partitions"] > 0
+    assert sorted(sweep["keys"]) == sorted(sweep["queries"])
+    missing = sorted(
+        k for k, v in sweep["queries"].items()
+        if sorted(v.get("counters", {})) != sorted(COUNTERS)
+    )
+    assert not missing, f"entries without the six counters: {missing[:10]}"
+
+
 def test_sweep_artifact_modes_match_oracle_declarations():
     """A query with an oracle_sql() entry must have been verified in
     'sql' (hash-match) mode — a silent fallback to rows-only would
