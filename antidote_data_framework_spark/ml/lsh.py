@@ -3,23 +3,22 @@
 These are the 100 TB paths for the exact operators that have SQL
 oracles (q_jaccard_block, q_cosine_topk): MinHash LSH turns the
 within-block O(N²) self-join into a band-bucket join; random-
-projection LSH turns brute-force ANN into bucket probing; KMeans is
-the embedding-space partitioner for IVF-style search.  All rows-only:
-sketches are implementation-specific.
+projection LSH turns brute-force ANN into bucket probing; k-means
+(``ml/kmeans.py``) is the embedding-space partitioner for IVF-style
+search.  All rows-only: sketches are implementation-specific.
 """
 
 from __future__ import annotations
 
-from pyspark.ml.clustering import KMeans
+import numpy as np
 from pyspark.ml.feature import BucketedRandomProjectionLSH
 from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hints import broadcast_small as bcast
-
 from ..registry import spark_query
 from ..sources import load_table
+from .kmeans import kmeans, nearest, train_sample
 
 
 # Banded MinHash parameters: 64 hashes in 16 bands of 4.  Collision
@@ -204,17 +203,24 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @spark_query("q_kmeans_labels")  # rows-only: cluster ids are run-relative
 def q_kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMeans (k=10, seed 42) over the embeddings — the IVF partition
-    step for vector search and the sanity check that the 10 planted
-    label clusters are recoverable.  Emits cluster sizes ranked
-    descending (ids are run-relative, sizes are the stable part)."""
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "features", array_to_vector(F.col("embedding").cast("array<double>"))
-    )
-    km = KMeans(k=10, seed=42, featuresCol="features", predictionCol="cluster")
-    model = km.fit(emb)
+    """k-means (k=10, seed 42, 20 Lloyd steps) over the embeddings —
+    the IVF partition step for vector search and the sanity check that
+    the 10 planted label clusters are recoverable.  The fit runs on the
+    driver over the bounded sample of ``ml/kmeans.py``; one mapInPandas
+    scan assigns every row.  Emits cluster sizes ranked descending (ids
+    are run-relative, sizes are the stable part)."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    centers = kmeans(train_sample(emb, "embedding")[1], 10, 42, 20)
+
+    def assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            yield pd.DataFrame({"cluster": nearest(X, centers)})
+
     sizes = (
-        model.transform(emb)
+        emb.mapInPandas(assign, "cluster int")
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy(F.desc("n_vectors"), F.asc("cluster"))
@@ -227,16 +233,16 @@ def q_kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @spark_query("q_ivf_cosine_topk")  # rows-only: approximate (probed) search
 def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style approximate nearest neighbors: KMeans (k=16) as the
+    """IVF-style approximate nearest neighbors: k-means (k=16) as the
     coarse quantizer, then exact cosine only inside the nprobe=6
     clusters nearest to the query — the third leg of the similarity
     stack (exact q_cosine_topk / LSH q_knn_lsh / IVF here).
 
     Scale shape: the partition-by-cluster layout means a query touches
-    nprobe/k of the corpus (~38% here; ~1% in production with k=4096),
-    and the probed exact search is the same broadcast-scored plan as
-    the exact operator.  Centroid scoring is driver-side numpy over a
-    k×dim array — small by construction, like the antidote state.
+    nprobe/k of the corpus (~38% here; ~1% in production with k=4096).
+    Centroid fitting and scoring are driver-side numpy over a bounded
+    sample and a k×dim array — small by construction, like the
+    antidote state.
 
     Recall caveat (measured): the fixture embeddings are near-
     isotropic random vectors, so recall ~= probed fraction (0.4@38%
@@ -253,55 +259,49 @@ def ivf_probe_topk(
     """The IVF recipe over any (vec_id, label, embedding) frame —
     factored from q_ivf_cosine_topk so the planted-cluster recall test
     can drive it on structured synthetic data (the fixture embeddings
-    are near-isotropic, which pins recall to the probed fraction)."""
-    import numpy as np
+    are near-isotropic, which pins recall to the probed fraction).
 
-    from ..operators.vectors import cosine, dot_product
-
-    # L2-normalize BEFORE clustering: on unit vectors Euclidean
-    # distance is monotone in cosine, so the KMeans cells align with
-    # cosine neighborhoods (without this, measured recall@5 vs the
-    # exact search dropped to 0.2).
-    # Materialize the norm BEFORE the per-element lambda — an
-    # unresolved expression captured by a higher-order function is
-    # re-evaluated per element, turning the normalize into dim x the
-    # full dot product per row — and cache the normalized vectors so
-    # the KMeans iterations do not re-read + re-normalize the parquet
-    # every pass (cleared between bench sweeps via clearCache).
-    normed = raw.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot_product(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+    L2-normalize BEFORE clustering: on unit vectors Euclidean distance
+    is monotone in cosine, so the k-means cells align with cosine
+    neighborhoods (without this, measured recall@5 vs the exact search
+    dropped to 0.2).  The fit (seed 42, 20 Lloyd steps) reads the
+    bounded sample of ``ml/kmeans.py``; one mapInPandas scan then adds
+    each row's ``cluster`` and its exact cosine to the query, so the
+    vectors never leave the Arrow pass and the probe is a filter."""
+    emb = raw.select("vec_id", "label", "embedding")
+    ids, X = train_sample(emb, "embedding")
+    centers = kmeans(X / np.linalg.norm(X, axis=1, keepdims=True), k, 42, 20)
+    hit = ids == query_vec_id  # always true for vec_id 0
+    qe = (
+        X[hit][0]
+        if hit.any()
+        else np.asarray(
+            emb.filter(F.col("vec_id") == query_vec_id).first()["embedding"],
+            dtype=np.float64,
+        )
     )
-    emb = normed.withColumn(
-        "features",
-        array_to_vector(
-            F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("nrm"))
-        ),
-    ).cache()
-    km = KMeans(k=k, seed=42, featuresCol="features", predictionCol="cluster")
-    model = km.fit(emb)
-    assigned = model.transform(emb)
-
-    query = emb.filter(F.col("vec_id") == query_vec_id).first()
-    q = np.array(query["features"].toArray(), dtype=np.float64)
-    centers = np.asarray(model.clusterCenters(), dtype=np.float64)
-    sims = (centers @ q) / (
-        np.linalg.norm(centers, axis=1) * np.linalg.norm(q) + 1e-12
-    )
+    q_nrm = np.linalg.norm(qe)
+    sims = (centers @ qe) / (np.linalg.norm(centers, axis=1) * q_nrm + 1e-12)
     probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
 
-    qdf = emb.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qe")
-    )
-    scored = (
-        assigned.filter(
-            F.col("cluster").isin(probe) & (F.col("vec_id") != query_vec_id)
-        )
-        .crossJoin(bcast(qdf, "1-row query vector"))
-        .withColumn("cos_raw", cosine(F.col("embedding"), F.col("qe")))
-    )
+    def assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            E = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            nrm = np.linalg.norm(E, axis=1, keepdims=True)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "label": pdf["label"],
+                    "cluster": nearest(E / nrm, centers),
+                    "cos_raw": (E @ qe) / (nrm[:, 0] * q_nrm),
+                }
+            )
+
+    scored = emb.mapInPandas(
+        assign, "vec_id long, label int, cluster int, cos_raw double"
+    ).filter(F.col("cluster").isin(probe) & (F.col("vec_id") != query_vec_id))
     return (
         scored.orderBy(F.desc("cos_raw"), F.asc("vec_id"))
         .select("vec_id", "label", F.round("cos_raw", 4).alias("cosine_sim"))

@@ -17,17 +17,19 @@ sum of 8 precomputed query-to-centroid distances looked up by code
 TPAMI 2011 — public method).
 
 Spark mapping:
-- codebooks: m tiny KMeans fits (k x subdim = 16 x 8 doubles each) —
-  model state is bounded by construction, like the IVF centroids;
-- encode: m MLlib ``model.transform`` passes — JVM-side, no Python —
-  then one bitwise pack projection;
+- codebooks: m tiny k-means fits (k x subdim = 16 x 8 doubles each)
+  on the driver, over one bounded vec_id-stride sample fetched through
+  Arrow (``ml/kmeans.py``) — model state is bounded by construction,
+  like the IVF centroids;
+- encode: ONE ``mapInPandas`` scan assigns every row's 8 nearest
+  sub-centroids and packs them into the INT code;
 - ADC: the query's 8 x 16 lookup table is a LITERAL array expression
   compiled into the scan (element_at by extracted nibble) — scoring
   the whole corpus is a codegen projection + TakeOrdered(10), zero
   shuffles beyond the top-k reduction.
 
 q_ivfpq_topk composes the two halves as real IVFADC: the coarse
-quantizer (KMeans k=16 on L2-normalized vectors, as q_ivf_cosine_topk)
+quantizer (k-means k=16 on L2-normalized vectors, as q_ivf_cosine_topk)
 prunes to nprobe cells, PQ codebooks are trained on the RESIDUALS
 v - centroid(cell), and each probed cell gets its own query LUT built
 from q - centroid(cell).  At 100 TB that is the memory layout FAISS
@@ -36,160 +38,121 @@ ships: cells shard the corpus, 4 B codes score the survivors.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import spark_query
 from ..sources import load_table
+from .kmeans import kmeans, nearest, train_sample
 
 PQ_M = 8  # subspaces
 PQ_K = 16  # centroids per subspace (4-bit codes)
 _SUBDIM = 64 // PQ_M
+_CODED = "vec_id long, label int, cell int, code int"
 
 
-def sliced_parts(emb: DataFrame) -> int:
-    """Partition count for the codebook-training frame: enough to
-    parallelize, few enough that 8 sequential tiny fits aren't pure
-    scheduling overhead."""
-    return min(8, emb.rdd.getNumPartitions())
+def _unit(X: np.ndarray) -> np.ndarray:
+    return X / np.linalg.norm(X, axis=1, keepdims=True)
 
 
-def _fit_codebooks(train: DataFrame, feature_prefix: str = "s"):
-    """The m=8 independent subspace KMeans fits, submitted concurrently
-    (disjoint feature columns over the same cached table — Spark
-    interleaves the tiny stages; deterministic per seed regardless of
-    submission order).  Measured at sf0.1: sequential 5.6 s ->
-    concurrent ~3 s.  random init: k-means|| runs ~5 extra passes to
-    seed 16 centers on an 8-dim subspace — measured 2x slower for no
-    codebook quality gain at this k."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.ml.clustering import KMeans
-
-    def _fit(i: int):
-        km = KMeans(
-            k=PQ_K, seed=42 + i, maxIter=10, initMode="random",
-            featuresCol=f"{feature_prefix}{i}", predictionCol=f"c{i}",
-        )
-        return i, km.fit(train)
-
-    with ThreadPoolExecutor(max_workers=PQ_M) as pool:
-        return dict(pool.map(_fit, range(PQ_M)))
+def _fit_books(R: np.ndarray) -> list[np.ndarray]:
+    """The m=8 subspace codebooks: k=16, 10 Lloyd steps, seed 42+i."""
+    return [
+        kmeans(R[:, i * _SUBDIM : (i + 1) * _SUBDIM], PQ_K, 42 + i, 10)
+        for i in range(PQ_M)
+    ]
 
 
-def _pack_codes() -> Column:
-    """All 8 4-bit codes ORed into one 32-bit INT (c_i in bits 4i..4i+3).
-    Java int bit semantics keep the top nibble exact even though
-    15 << 28 is negative as signed — extraction uses the unsigned
-    shift."""
-    packed = F.col("c0").cast("int")
-    for i in range(1, PQ_M):
-        packed = packed.bitwiseOR(F.shiftleft(F.col(f"c{i}").cast("int"), 4 * i))
-    return packed
+def _encoder(books: list[np.ndarray], coarse: np.ndarray | None = None):
+    """mapInPandas kernel (vec_id, label, embedding) -> ``_CODED``: the
+    8 nearest sub-centroid indices packed into one INT (c_i in bits
+    4i..4i+3; a top nibble >= 8 makes the INT negative, which is why
+    extraction uses the unsigned shift).  With a coarse quantizer the
+    row is L2-normalized, assigned its nearest ``cell``, and its
+    residual is encoded; without one ``cell`` is 0."""
+
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            cell = np.zeros(len(X), np.int32)
+            if coarse is not None:
+                X = _unit(X)
+                cell = nearest(X, coarse)
+                X = X - coarse[cell]
+            code = np.zeros(len(X), np.uint32)
+            for i, b in enumerate(books):
+                sub = X[:, i * _SUBDIM : (i + 1) * _SUBDIM]
+                code |= nearest(sub, b).astype(np.uint32) << np.uint32(4 * i)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "label": pdf["label"],
+                    "cell": cell,
+                    "code": code.view(np.int32),
+                }
+            )
+
+    return encode
 
 
 def _nibble(packed: Column, i: int) -> Column:
     return F.shiftrightunsigned(packed, 4 * i).bitwiseAND(F.lit(15))
 
 
-def _adc_expr(luts: list[list[float]], packed: Column) -> Column:
-    """ADC distance: 8 literal 16-entry LUT lookups by extracted
-    nibble — pure codegen, reads only the packed 4-byte code."""
+def _lut(qv: np.ndarray, books: list[np.ndarray]) -> Column:
+    """The flat 8 x 16 ADC table of ``qv`` as a literal array: entry
+    i*16 + c is the squared distance of subvector i to centroid c."""
+    return F.array(
+        *[
+            F.lit(float(d))
+            for i, b in enumerate(books)
+            for d in ((qv[i * _SUBDIM : (i + 1) * _SUBDIM] - b) ** 2).sum(axis=1)
+        ]
+    )
+
+
+def _adc_expr(lut: Column, packed: Column) -> Column:
+    """ADC distance: 8 LUT lookups by extracted nibble — pure codegen,
+    reads only the packed 4-byte code."""
     return sum(
-        F.element_at(F.array(*[F.lit(d) for d in luts[i]]), _nibble(packed, i) + 1)
+        F.element_at(lut, F.lit(i * PQ_K) + _nibble(packed, i) + 1)
         for i in range(PQ_M)
     )
 
 
-@spark_query("q_pq_adc_topk")  # rows-only: KMeans codebooks are run-relative
+@spark_query("q_pq_adc_topk")  # rows-only: k-means codebooks are sample-relative
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 approximate neighbors of vec_id=0 by PQ/ADC distance,
     with the per-vector storage cost (4 B packed codes vs 256 B
     floats = 64x).  Scoring provably uses only the packed column —
-    the byte-wide code columns are dropped before the ADC projection.
+    the encode pass emits nothing else per vector.
     Recall vs the exact search is test-enforced
     (tests/test_pq_recall.py); ADC self-distance of the query's own
-    row must rank it first."""
-    import numpy as np
-    from pyspark.ml.functions import array_to_vector
+    row must rank it first.
 
+    Codebooks train on the bounded vec_id-stride sample of
+    ``ml/kmeans.py`` (16 centers on an 8-dim subspace saturate long
+    before corpus size); the encode pass always covers every row."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+        "vec_id", "label", "embedding"
     )
-    # slice into m subvectors; cache — each KMeans fit iterates its slice
-    # coalesce: 8 concurrent KMeans fits over a small cached frame are
-    # task-overhead-bound at 32 partitions; at real scale size this to
-    # corpus/partition-memory, not CPU count (same knob as the
-    # streaming state partitions).
-    n_part = max(4, sliced_parts(emb))
-    sliced = (
-        emb.coalesce(n_part)
+    ids, X = train_sample(emb, "embedding")
+    books = _fit_books(X)
+    lut = _lut(X[ids == 0][0], books)  # 128 doubles — bounded driver state
+    return (
+        emb.mapInPandas(_encoder(books), _CODED)
         .select(
             "vec_id",
             "label",
-            *[
-                array_to_vector(F.slice("v", i * _SUBDIM + 1, _SUBDIM)).alias(f"s{i}")
-                for i in range(PQ_M)
-            ],
-        )
-        .cache()
-    )
-
-    query = (
-        emb.filter(F.col("vec_id") == 0).select("v").first()["v"]
-    )  # 64 doubles — bounded driver state, like the IVF query row
-    q = np.array(query)
-
-    # Above PQ_TRAIN_CAP vectors, codebooks train on a bounded
-    # deterministic vec_id-stride sample — the standard PQ practice:
-    # 16 centers on an 8-dim subspace saturate long before corpus
-    # size, and at 100 TB training the quantizer on the full corpus
-    # is the difference between minutes and days.  ASSIGNMENT
-    # (transform) always covers every row.  The gate matters: forcing
-    # the sample at fixture scale was MEASURED SLOWER (5.9 s -> 7.0 s
-    # warm at sf0.1 — the extra filter+cache fixed costs dominate
-    # when the fits are scheduling-bound, not data-bound), so the
-    # sample path only engages where data size is the actual cost.
-    # The count() doubles as the cache fill the first fit needs.
-    n_vecs = sliced.count()
-    stride = max(1, n_vecs // 65536)
-    train = (
-        sliced.filter(F.col("vec_id") % stride == 0).cache()
-        if stride > 1
-        else sliced
-    )
-
-    models = _fit_codebooks(train)
-
-    coded = sliced
-    luts: list[list[float]] = []
-    for i in range(PQ_M):
-        model = models[i]
-        coded = model.transform(coded)
-        centers = np.vstack(model.clusterCenters())  # k x subdim, bounded
-        qs = q[i * _SUBDIM : (i + 1) * _SUBDIM]
-        luts.append([float(((qs - c) ** 2).sum()) for c in centers])
-
-    # the stored representation: 4 B/vec, nothing else survives
-    packed = coded.select("vec_id", "label", _pack_codes().alias("code"))
-    out = (
-        packed.select(
-            "vec_id",
-            "label",
-            F.round(_adc_expr(luts, F.col("code")), 4).alias("adc_dist"),
+            F.round(_adc_expr(lut, F.col("code")), 4).alias("adc_dist"),
             F.lit(PQ_M // 2).alias("code_bytes"),  # 8 x 4-bit packed = 4 B
             F.lit(64 * 4).alias("float_bytes"),
         )
         .orderBy("adc_dist", "vec_id")
         .limit(10)
-    )
-    rows = out.collect()
-    if train is not sliced:
-        train.unpersist()
-    sliced.unpersist()
-    return spark.createDataFrame(
-        rows,
-        "vec_id BIGINT, label INT, adc_dist DOUBLE, code_bytes INT, float_bytes INT",
     )
 
 
@@ -197,141 +160,63 @@ IVFPQ_COARSE_K = 16
 IVFPQ_NPROBE = 6
 
 
-@spark_query("q_ivfpq_topk")  # rows-only: KMeans state is run-relative
+@spark_query("q_ivfpq_topk")  # rows-only: k-means state is sample-relative
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (IVFADC, Jegou et al. 2011 §IV): coarse cells prune the
     corpus, packed 4-bit PQ codes over CELL RESIDUALS score the
     survivors — the composition of q_ivf_cosine_topk and
     q_pq_adc_topk the r5 verdict called out as missing.
 
-    - Coarse: KMeans k=16 on L2-normalized vectors (cosine-aligned
-      cells, same as IVF); nprobe=6 cells nearest the query survive.
-    - Encode: residual r = v_norm - centroid(cell) per row (zip_with
-      against a literal centroid array indexed by cell — codegen, no
-      shuffle), then the 8 subspace codebooks fit on residuals and
-      packed to one INT.
-    - Query: per-probed-cell LUTs from q - centroid(cell); a 6-way
-      CASE picks the cell's flat 128-entry LUT, nibbles index into it.
+    - Fit (driver, one bounded sample): coarse k-means k=16 (seed 7)
+      on L2-normalized vectors — cosine-aligned cells, same as IVF —
+      then the 8 subspace codebooks on the sample's residuals
+      v_norm - centroid(cell).
+    - Encode: one mapInPandas scan normalizes each row, assigns its
+      cell and packs its residual's 8 codes into one INT.
+    - Query: nprobe=6 cells nearest the query survive; per-probed-cell
+      LUTs from q - centroid(cell); a 6-way CASE picks the cell's flat
+      128-entry LUT, nibbles index into it.
 
     Scale shape: a query reads nprobe/k of the corpus at 4 B/vec —
     cells shard the data, codes fit in memory; this is the FAISS
-    IVFADC layout re-expressed as two KMeans fits + pure projections.
-    Top-10 by ADC over probed cells; recall gate vs exact cosine in
-    tests/test_pq_recall.py (isotropic-fixture floor caveat as IVF)."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from ..operators.vectors import dot_product
-
-    raw = load_table(spark, sf_dir, "embeddings")
-    normed = raw.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot_product(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+    IVFADC layout re-expressed as one sample fit, one encode scan and
+    pure projections.  Top-10 by ADC over probed cells; recall gate vs
+    exact cosine in tests/test_pq_recall.py (isotropic-fixture floor
+    caveat as IVF)."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding"
     )
-    n_part = max(4, sliced_parts(raw))
-    emb = (
-        normed.coalesce(n_part)
-        .select(
-            "vec_id",
-            "label",
-            F.transform(
-                F.col("embedding"), lambda x: x.cast("double") / F.col("nrm")
-            ).alias("vn"),
-        )
-        .withColumn("features", array_to_vector("vn"))
-        .cache()
-    )
-    coarse = KMeans(
-        k=IVFPQ_COARSE_K, seed=7, featuresCol="features", predictionCol="cell"
-    ).fit(emb)
-    centers = np.asarray(coarse.clusterCenters(), dtype=np.float64)  # 16 x 64
+    ids, X = train_sample(emb, "embedding")
+    Xn = _unit(X)
+    centers = kmeans(Xn, IVFPQ_COARSE_K, 7, 20)  # 16 x 64
+    books = _fit_books(Xn - centers[nearest(Xn, centers)])
 
-    # residual = vn - centroid(cell): literal 16 x 64 centroid table,
-    # zip_with indexed by the row's cell — pure codegen
-    centers_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in c]) for c in centers]
-    )
-    assigned = coarse.transform(emb).select(
-        "vec_id",
-        "label",
-        "cell",
-        F.zip_with(
-            "vn", F.element_at(centers_lit, F.col("cell") + 1), lambda a, b: a - b
-        ).alias("res"),
-    )
-    sliced = assigned.select(
-        "vec_id",
-        "label",
-        "cell",
-        *[
-            array_to_vector(F.slice("res", i * _SUBDIM + 1, _SUBDIM)).alias(f"s{i}")
-            for i in range(PQ_M)
-        ],
-    ).cache()
-    sliced.count()  # fill cache once for the 8 concurrent fits
-    models = _fit_codebooks(sliced)
-
-    qrow = emb.filter(F.col("vec_id") == 0).first()
-    q = np.array(qrow["vn"], dtype=np.float64)
+    q = Xn[ids == 0][0]
     sims = (centers @ q) / (np.linalg.norm(centers, axis=1) * np.linalg.norm(q) + 1e-12)
     probe = [int(i) for i in np.argsort(-sims)[:IVFPQ_NPROBE]]
 
-    coded = sliced
-    books: list[np.ndarray] = []
-    for i in range(PQ_M):
-        coded = models[i].transform(coded)
-        b = np.vstack(models[i].clusterCenters())  # k_eff x subdim
-        if b.shape[0] < PQ_K:
-            # KMeans returns FEWER than k centers when duplicate points
-            # collapse a cluster (hit at the 9x replicated scale
-            # fixture: one subspace came back with 15 books, so the
-            # flat 16-stride LUT was 127 doubles and misaligned).  Pad
-            # to the fixed stride — codes come from the same model, so
-            # padded slots are never indexed.
-            b = np.vstack([b, np.repeat(b[-1:], PQ_K - b.shape[0], axis=0)])
-        books.append(b)
-
-    # per-probed-cell flat LUT (8 x 16 = 128 doubles): ADC terms for
-    # the query's residual against THAT cell
-    def cell_lut(c: int) -> list[float]:
-        qr = q - centers[c]
-        flat: list[float] = []
-        for i in range(PQ_M):
-            qs = qr[i * _SUBDIM : (i + 1) * _SUBDIM]
-            flat.extend(float(((qs - b) ** 2).sum()) for b in books[i])
-        return flat
-
+    # per-probed-cell flat LUT: ADC terms for the query's residual
+    # against THAT cell
     lut_expr = None
     for c in probe:
-        arr = F.array(*[F.lit(d) for d in cell_lut(c)])
+        arr = _lut(q - centers[c], books)
         lut_expr = (
             F.when(F.col("cell") == c, arr)
             if lut_expr is None
             else lut_expr.when(F.col("cell") == c, arr)
         )
-    packed = coded.filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0)).select(
-        "vec_id", "label", "cell", _pack_codes().alias("code"), lut_expr.alias("lut")
+    packed = (
+        emb.mapInPandas(_encoder(books, centers), _CODED)
+        .filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
+        .select("vec_id", "label", "code", lut_expr.alias("lut"))
     )
-    adc = sum(
-        F.element_at(F.col("lut"), F.lit(i * PQ_K) + _nibble(F.col("code"), i) + 1)
-        for i in range(PQ_M)
-    )
-    out = (
+    return (
         packed.select(
             "vec_id",
             "label",
-            F.round(adc, 4).alias("adc_dist"),
+            F.round(_adc_expr(F.col("lut"), F.col("code")), 4).alias("adc_dist"),
             F.lit(PQ_M // 2).alias("code_bytes"),
         )
         .orderBy("adc_dist", "vec_id")
         .limit(10)
-    )
-    rows = out.collect()
-    sliced.unpersist()
-    emb.unpersist()
-    return spark.createDataFrame(
-        rows, "vec_id BIGINT, label INT, adc_dist DOUBLE, code_bytes INT"
     )

@@ -196,6 +196,32 @@ def test_packed_pair_key_format_lives_in_pairs_module():
     )
 
 
+def test_kmeans_fits_live_in_kmeans_module():
+    """Every engine k-means fit goes through ml/kmeans.py: a bounded
+    driver-side sample fit plus one Arrow assign pass.  MLlib's KMeans
+    runs each Lloyd step as its own job (PQ's 8 codebooks cost ~130),
+    so no engine file may import pyspark.ml.clustering or call
+    ``KMeans(``, and no file under ml/ may fan fits out on a
+    ThreadPoolExecutor."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
+    mllib = re.compile(r"pyspark\.ml\.clustering|\bKMeans\(")
+    bad: list[str] = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if mllib.search(line) or (
+                rel.startswith("ml/") and "ThreadPoolExecutor" in line
+            ):
+                bad.append(f"{rel}:{i}: {line.strip()}")
+    assert not bad, (
+        "k-means outside ml/kmeans.py — use train_sample / kmeans / "
+        "nearest:\n" + "\n".join(bad)
+    )
+
+
 def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
     """NOT EXISTS plans as LeftAnti; the global-average scalar arrives
     via a broadcast, not a shuffle."""

@@ -56,23 +56,21 @@ def test_ivfpq_topk_recall_and_laws(spark, sf_dir):
 
 
 def test_ivfpq_collapsed_codebook_pad(spark, tmp_path):
-    """Pin the r8 codebook-pad fix (ml/pq.py: pad to PQ_K stride) at
-    unit scale, so it stops depending on the 9x scale harness.
+    """Pin the r8 collapsed-codebook case at unit scale, so it stops
+    depending on the 9x scale harness.
 
-    Duplicate-heavy vectors make MLlib KMeans return FEWER than k
+    Duplicate-heavy vectors made MLlib KMeans return FEWER than k
     centers (random init de-dups its sampled seeds), and residuals
     inside a pure-duplicate coarse cell collapse to a handful of
-    distinct points.  Before the pad, one short codebook made the
-    per-cell flat ADC LUT shorter than PQ_M*PQ_K and misaligned every
-    later subspace's offsets -- element_at crashed at index 128.  This
-    fixture (240 vectors, only 6 distinct templates) forces the
-    collapse deterministically and asserts the query still answers."""
+    distinct points.  One short codebook made the per-cell flat ADC
+    LUT shorter than PQ_M*PQ_K and misaligned every later subspace's
+    offsets -- element_at crashed at index 128.  ml/kmeans.py keeps an
+    emptied center in place, so every codebook has exactly PQ_K rows;
+    this fixture (240 vectors, only 6 distinct templates) asserts that
+    and that the query still answers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import functions as F
-
+    from antidote_data_framework_spark.ml.kmeans import kmeans
     from antidote_data_framework_spark.ml.pq import PQ_K
 
     rng = np.random.RandomState(7)
@@ -90,16 +88,10 @@ def test_ivfpq_collapsed_codebook_pad(spark, tmp_path):
     )
     pq.write_table(tab, str(tmp_path / "embeddings.parquet"))
 
-    # the property the regression test RELIES on, asserted so the test
-    # can never silently stop exercising the pad path: a k=16 fit over
-    # 6 distinct points returns fewer than 16 centers
-    feats = spark.read.parquet(str(tmp_path / "embeddings.parquet")).select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        )
-    )
-    km = KMeans(k=PQ_K, seed=42, maxIter=10, initMode="random").fit(feats)
-    assert len(km.clusterCenters()) < PQ_K
+    # the property the regression test RELIES on: a k=16 fit over 6
+    # distinct points still returns exactly 16 centers, so the flat
+    # per-cell LUT keeps its PQ_M * PQ_K stride
+    assert kmeans(mat.astype(np.float64), PQ_K, 42, 10).shape[0] == PQ_K
 
     rows = QUERIES["q_ivfpq_topk"](spark, str(tmp_path)).collect()
     assert len(rows) == 10
