@@ -22,6 +22,7 @@ from pyspark.ml.recommendation import ALS
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..session import derived
 from .recsys_data import RATINGS_CTE, SPLIT_TRAIN_PRED, is_train, ratings_df
@@ -110,7 +111,8 @@ def _rmse_gate_row(
     rmse = evaluator.evaluate(preds)
     n_test = preds.count()
     preds.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n_train), int(n_test), bool(rmse < loose), bool(rmse < tight))],
         "n_train BIGINT, n_test BIGINT, passed BOOLEAN, rmse_tight BOOLEAN",
     )

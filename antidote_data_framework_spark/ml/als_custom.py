@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_bounded
+from ..functions.local import local_frame
 from ..registry import spark_query
 from .recsys_data import ratings_df
 
@@ -274,7 +275,8 @@ def _warmstart_refit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uw, Vw = custom_als(updated, alternations=1, U=U0, V=V0)
     rmse_warm = als_rmse(updated, Uw, Vw)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("cold_fit_base", 2, round(rmse_cold, 6)),
             ("warm_refit_updated", 1, round(rmse_warm, 6)),

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_bounded
+from ..functions.local import local_frame
 from ..registry import spark_query
 from .recsys_data import ratings_df
 
@@ -233,7 +234,8 @@ def q_antidote_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         for u in range(k)
         for j in range(m)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "antidote_user INT, item_idx INT, rating_before DOUBLE, grad DOUBLE, rating_after DOUBLE",
     )
@@ -397,8 +399,8 @@ def q_antidote_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             for u in range(k)
             for j in range(m)
         ]
-        antidote_df = spark.createDataFrame(
-            antidote_rows, "user_id BIGINT, item_id BIGINT, rating DOUBLE"
+        antidote_df = local_frame(
+            spark, antidote_rows, "user_id BIGINT, item_id BIGINT, rating DOUBLE"
         )
         combined = base.unionByName(antidote_df)
         model = _fit(combined)
@@ -427,7 +429,8 @@ def q_antidote_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         last_grad = grad
 
     base.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (it, round(p, 6), n, round(baseline_pol - p, 6))
             for it, p, n in trajectory
@@ -620,7 +623,8 @@ def q_antidote_step_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
         for u in range(k)
         for j in range(m)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "antidote_user INT, item_idx INT, rating_before DOUBLE, rating_after DOUBLE, "
         "unfairness_before DOUBLE, unfairness_after DOUBLE",

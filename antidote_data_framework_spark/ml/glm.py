@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..sources import load_table
 
@@ -130,7 +131,7 @@ def q_glm_logreg_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
             "accuracy_at_half",
         )
         # materialize before unpersist so the cached frame backs the agg
-        out = spark.createDataFrame(out.collect(), schema=out.schema)
+        out = local_frame(spark, out.collect(), out.schema)
         return out
     finally:
         df.unpersist()

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -116,8 +117,8 @@ def bloom_build(df: DataFrame, key: str, m_bits: int) -> DataFrame:
     for r in words.collect():  # <= m/64 rows by construction
         dense[int(r["widx"])] = int(r["word"])
     spark = df.sparkSession
-    return spark.createDataFrame(
-        [(dense, m_bits)], "bloom ARRAY<BIGINT>, m_bits BIGINT"
+    return local_frame(
+        spark, [(dense, m_bits)], "bloom ARRAY<BIGINT>, m_bits BIGINT"
     )
 
 

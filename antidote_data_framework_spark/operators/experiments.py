@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -343,7 +344,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             size = bin(s).count("1")
             phi += _W[size] * (v.get(s + bit, 0.0) - v.get(s, 0.0))
         out.append((ch, round(phi, 4)))
-    return spark.createDataFrame(out, "channel STRING, shapley_value DOUBLE")
+    return local_frame(spark, out, "channel STRING, shapley_value DOUBLE")
 
 
 @spark_query(

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -461,7 +462,8 @@ def q_observe_inflight_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(m["n_rows"]), int(m["n_large"]), float(m["total"]))],
         "n_rows BIGINT, n_large BIGINT, total DOUBLE",
     )
@@ -1562,7 +1564,8 @@ def q_plan_self_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 uses_python_eval(df),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "query STRING, has_pushdown BOOLEAN, n_broadcast_joins INT, "
         "has_partial_agg BOOLEAN, has_wscg BOOLEAN, python_in_plan BOOLEAN",

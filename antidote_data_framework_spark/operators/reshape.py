@@ -134,6 +134,8 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "salt", (F.col("l_orderkey") % SALT).cast("int")
     )
+    # An opaque Python-RDD scan of unknown size, not functions/local.py's
+    # LocalRelation, which the optimizer would size and auto-broadcast.
     flags = spark.createDataFrame(
         [("A", "accepted"), ("N", "none"), ("R", "returned")],
         "flag_code STRING, flag_desc STRING",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -102,8 +103,8 @@ def q_source_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_csv, f_json = pool.submit(_csv_leg), pool.submit(_json_leg)
         n_csv, n_json = f_csv.result(), f_json.result()
-    return spark.createDataFrame(
-        [(int(n_csv), int(n_json))], "n_csv BIGINT, n_json BIGINT"
+    return local_frame(
+        spark, [(int(n_csv), int(n_json))], "n_csv BIGINT, n_json BIGINT"
     )
 
 
@@ -447,7 +448,10 @@ def q_dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = spark.read.parquet(out)
     # The dim filter must be a comparison predicate: Spark's DPP rule
     # gates on isLikelySelective(), which accepts EqualTo/In/Like but
-    # NOT a bare boolean attribute — a real integration subtlety.
+    # NOT a bare boolean attribute — a real integration subtlety.  The
+    # dim stays an opaque Python-RDD scan: a LocalRelation (see
+    # functions/local.py) would be constant-folded and leave no
+    # runtime filter to inject.
     dim = spark.createDataFrame(
         [
             ("1-URGENT", "urgent"),
@@ -608,8 +612,8 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         out_rows = list(pool.map(_one, ("none", "snappy", "zstd")))
-    return spark.createDataFrame(
-        out_rows, "codec STRING, n_files INT, n_rows BIGINT, n_bytes BIGINT"
+    return local_frame(
+        spark, out_rows, "codec STRING, n_files INT, n_rows BIGINT, n_bytes BIGINT"
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -575,7 +576,7 @@ def q_autocorr_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = centered.agg(
         F.sum(F.col("y") * F.col("y")).cast("decimal(38,0)").alias("d")
     )
-    lags = spark.createDataFrame([(1,), (2,), (3,), (7,)], ["lag"])
+    lags = local_frame(spark, [(1,), (2,), (3,), (7,)], "lag BIGINT")
     a, b = centered.alias("a"), centered.alias("b")
     num = (
         bcast(lags, "literal lag dim (4 rows)")

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -336,7 +337,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round((base_p - removed_p) / base_p, 4),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel STRING, conv_base DOUBLE, conv_removed DOUBLE, removal_effect DOUBLE",
     )

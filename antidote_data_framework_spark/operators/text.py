@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..session import derived
 from ..sources import load_table
@@ -355,8 +356,8 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lens = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
     )
-    thresholds = spark.createDataFrame(
-        [(t,) for t in DEDUP_CURVE_THRESHOLDS], "threshold double"
+    thresholds = local_frame(
+        spark, [(t,) for t in DEDUP_CURVE_THRESHOLDS], "threshold double"
     )
     removed = maxj.join(
         bcast(thresholds, "5-row literal threshold table"),

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..sources import load_table
 
@@ -654,7 +655,7 @@ def chunked_carry_fold(
         # used to TypeError here instead).
         mx = ranked.agg(F.max("chunk")).first()[0]
         if mx is None:
-            return df.sparkSession.createDataFrame([], state_schema)
+            return local_frame(df.sparkSession, [], state_schema)
         n_passes = mx + 1
         state: DataFrame | None = None
         for k in range(n_passes):

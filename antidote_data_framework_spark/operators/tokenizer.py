@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..session import derived
 from ..sources import load_table
@@ -150,8 +151,8 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     same greedy order."""
     _vocab, learned = _learn_bpe(spark, sf_dir)
     # NOTE: _vocab stays cached for q_bpe_encode (see _learn_bpe).
-    return spark.createDataFrame(
-        learned, "iteration INT, pair STRING, merged STRING, pair_count BIGINT"
+    return local_frame(
+        spark, learned, "iteration INT, pair STRING, merged STRING, pair_count BIGINT"
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.local import local_frame
 from ..registry import spark_query
 from ..sources import load_table
 
@@ -93,7 +94,8 @@ def q_udf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT sw.word, sw.pos FROM udtf_first_doc, LATERAL split_words(text) sw"
     ).count()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(n_udf), int(n_pandas), int(n_grouped), int(n_map), int(n_udtf))],
         "n_scalar_udf BIGINT, n_pandas_udf BIGINT, n_apply_in_pandas BIGINT, "
         "n_map_in_pandas BIGINT, n_udtf BIGINT",

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -498,6 +499,6 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rank + 1, int(vid), round(rels[vid], 4), round(score, 4))
         for rank, (vid, score) in enumerate(selected)
     ]
-    return spark.createDataFrame(
-        out, "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
+    return local_frame(
+        spark, out, "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
     )

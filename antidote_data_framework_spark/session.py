@@ -9,6 +9,9 @@ Local-mode defaults that still encode the cluster posture:
   cluster this would be ~2-3x total executor cores (AQE coalesces down).
 - Arrow on: every pandas exchange (the antidote gradient carrier, the
   multimodal UDFs) crosses the Python boundary in columnar batches.
+  Rows built on the driver enter Spark through ``functions/local.py``
+  as an Arrow table, which plans as a JVM ``LocalRelation`` and starts
+  no Python worker.
 - Session timezone pinned to UTC so timestamp semantics are identical
   to the DuckDB oracle and independent of host TZ.
 """

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import broadcast_small as bcast
+from ..functions.local import local_frame
 
 from ..registry import spark_query
 from ..sources import load_table
@@ -717,7 +718,8 @@ def q_stream_lakehouse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rows = ingested.count()
     n_distinct = ingested.select("event_id").distinct().count()
     n_src = spark.read.parquet(src).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n_versions),
@@ -1400,7 +1402,8 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_type") == "click")
         .count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(total), int(matched), int(expired), int(total - matched - expired))],
         "n_clicks bigint, n_matched bigint, n_expired_unmatched bigint, "
         "n_retained_in_state bigint",

@@ -222,6 +222,43 @@ def test_kmeans_fits_live_in_kmeans_module():
     )
 
 
+def test_driver_rows_enter_through_local_frame():
+    """Rows the driver holds enter Spark through functions/local.py: an
+    Arrow table that plans as a LocalRelation.  ``createDataFrame`` over
+    a Python list makes a pickled Python RDD whose first action forks
+    the Python worker daemon just to read the rows back, so no other
+    engine file may call it, except the dims listed below, whose
+    demonstration needs an opaque scan of unknown size."""
+    import pathlib
+    import re
+
+    allowed = {
+        ("operators/reshape.py", "flags"): "the salted dim must not be auto-broadcast",
+        ("operators/scans.py", "dim"): "DPP needs a dim scan, not a folded constant",
+    }
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
+    assign = re.compile(r"(\w+)\s*=\s*[\w.]*createDataFrame\(")
+    bad: list[str] = []
+    seen: set[tuple[str, str]] = set()
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        if rel == "functions/local.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if "createDataFrame(" not in line:
+                continue
+            m = assign.search(line)
+            if m and (rel, m.group(1)) in allowed:
+                seen.add((rel, m.group(1)))
+            else:
+                bad.append(f"{rel}:{i}: {line.strip()}")
+    assert not bad, (
+        "createDataFrame outside functions/local.py — use "
+        "local_frame(spark, rows, schema):\n" + "\n".join(bad)
+    )
+    assert seen == set(allowed), f"stale allow-list entries: {set(allowed) - seen}"
+
+
 def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
     """NOT EXISTS plans as LeftAnti; the global-average scalar arrives
     via a broadcast, not a shuffle."""
