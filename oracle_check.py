@@ -57,20 +57,23 @@ from perfbench.spans import SparkCounters
 STAGED_MARKERS = os.path.join(SCRATCH, "events_*", "_staged.json")
 COUNTERS = ("build_jobs", "jobs", "stages", "tasks", "shuffle_write_bytes", "batches")
 # Keys whose shuffle-write bytes differed between runs of identical
-# code -> the largest difference the compare forgives: the widest
-# spread seen so far between two sf0.01 sweeps of unchanged code on 4
-# cores.  Shuffle blocks are compressed, and the order in which rows
+# code -> the largest difference the compare forgives: the spread
+# measured over sf0.01 sweeps of unchanged code on 4 cores (the entries
+# for q_fuzzy_join_names, q_attribution_touch, q_embed_gram and
+# q_graph_pagerank over one anchor and two further sweeps of the same
+# tree).  Shuffle blocks are compressed, and the order in which rows
 # reach a task after a shuffle is not fixed, so the bytes that task
 # writes can vary; the same keys run alone in fresh processes write
 # identical bytes, so the spread follows what ran earlier in the
-# process.  Every other counter must match exactly.  Three keys also
-# flip counts between two states, probably AQE re-planning on the
-# varying sizes (cause not pinned down): q_als_rmse_gate (19/20 build
-# jobs, 43/45 stages, 72/83 tasks), q_lakehouse_zonemap_skip (15/16
-# tasks) and q_cogroup_align (11/12 tasks); the compare reports them.
+# process, and a later sweep can move past a listed value.  Every
+# other counter must match exactly.  Three keys also flip counts
+# between two states, probably AQE re-planning on the varying sizes
+# (cause not pinned down): q_als_rmse_gate (19/20 build jobs, 43/45
+# stages, 72/83 tasks), q_lakehouse_zonemap_skip (15/16 tasks) and
+# q_cogroup_align (11/12 tasks); the compare reports them.
 BYTE_TOLERANCE = {
     "q_als_rmse_gate": 163_163,
-    "q_als_warmstart_refit": 1_113,
+    "q_als_warmstart_refit": 646,
     "q_antidote_loop": 574_136,
     "q_attribution_touch": 176,
     "q_cogroup_align": 124,
@@ -78,12 +81,11 @@ BYTE_TOLERANCE = {
     "q_fairness_absolute": 1,
     "q_fairness_under_over": 1,
     "q_fairness_value": 1,
-    "q_fuzzy_join_names": 1_700,
+    "q_fuzzy_join_names": 750,
     "q_global_sort_range": 174,
-    "q_graph_pagerank": 10,
+    "q_graph_pagerank": 6,
     "q_lakehouse_zonemap_skip": 519,
     "q_negative_sampling": 39_693,
-    "q_pca_project": 40,
     "q_sink_compaction": 658,
     "q_source_custom_pyds": 1_764,
     "q_tpch_q21_waiting": 6_637,

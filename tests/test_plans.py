@@ -227,36 +227,45 @@ def test_driver_rows_enter_through_local_frame():
     Arrow table that plans as a LocalRelation.  ``createDataFrame`` over
     a Python list makes a pickled Python RDD whose first action forks
     the Python worker daemon just to read the rows back, so no other
-    engine file may call it, except the dims listed below, whose
-    demonstration needs an opaque scan of unknown size."""
+    engine function may call it, except the dims listed below (one call
+    each), whose demonstration needs an opaque scan of unknown size."""
+    import ast
     import pathlib
-    import re
 
     allowed = {
-        ("operators/reshape.py", "flags"): "the salted dim must not be auto-broadcast",
-        ("operators/scans.py", "dim"): "DPP needs a dim scan, not a folded constant",
+        ("operators/reshape.py", "q_skew_salted_join"): "the salted dim must not be auto-broadcast",
+        ("operators/scans.py", "q_dpp_partition_pruned_join"): "DPP needs a dim scan, not a folded constant",
     }
     pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
-    assign = re.compile(r"(\w+)\s*=\s*[\w.]*createDataFrame\(")
     bad: list[str] = []
-    seen: set[tuple[str, str]] = set()
+    calls: dict[tuple[str, str], int] = {}
+
+    def walk(node: ast.AST, rel: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Call) and (
+                getattr(child.func, "attr", None) == "createDataFrame"
+                or getattr(child.func, "id", None) == "createDataFrame"
+            ):
+                if (rel, fn) in allowed:
+                    calls[(rel, fn)] = calls.get((rel, fn), 0) + 1
+                else:
+                    bad.append(f"{rel}:{child.lineno}: in {fn}")
+            walk(child, rel, fn)
+
     for py in sorted(pkg.rglob("*.py")):
         rel = py.relative_to(pkg).as_posix()
-        if rel == "functions/local.py":
-            continue
-        for i, line in enumerate(py.read_text().splitlines(), 1):
-            if "createDataFrame(" not in line:
-                continue
-            m = assign.search(line)
-            if m and (rel, m.group(1)) in allowed:
-                seen.add((rel, m.group(1)))
-            else:
-                bad.append(f"{rel}:{i}: {line.strip()}")
+        if rel != "functions/local.py":
+            walk(ast.parse(py.read_text()), rel, "<module>")
     assert not bad, (
         "createDataFrame outside functions/local.py — use "
         "local_frame(spark, rows, schema):\n" + "\n".join(bad)
     )
-    assert seen == set(allowed), f"stale allow-list entries: {set(allowed) - seen}"
+    assert calls == dict.fromkeys(allowed, 1), (
+        f"each allow-listed dim must make exactly one call: {calls}"
+    )
 
 
 def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
