@@ -41,8 +41,8 @@ def _als_fit_cached(spark: SparkSession, sf_dir: str):
     train = ratings_df(spark, sf_dir).filter(
         is_train(F.col("user_id"), F.col("item_id"))
     )
-    # Block count sized to the data (~60k ratings/block, the
-    # antidote-loop rule): MLlib's default 10x10 block grid has a
+    # Block count sized to the data (~60k ratings/block):
+    # MLlib's default 10x10 block grid has a
     # fixed per-block-pair scheduling floor that dominates when
     # blocks are near-empty — measured 2.4x fit-time saving at
     # sf0.1 with identical RMSE-gate outcome.  At 100 TB the same

@@ -1,202 +1,167 @@
-"""Custom distributed ALS with WARM START — the capability MLlib's ALS
-lacks (no public API to seed ``userFactors``/``itemFactors``), recorded
-as a rough edge since round 1: the antidote loop refits from scratch
-every iteration because it has nowhere to put the previous factors.
+"""Driver-local ALS with WARM START: one Arrow fetch of the ratings,
+then every half-step in numpy on the driver.
+
+MLlib's ALS has no public API to seed ``userFactors``/``itemFactors``,
+so a refit after new ratings starts from scratch, and like any
+distributed alternation it pays a driver<->executor round trip per
+half-step.  The fits this engine runs outside the contract keys (the
+antidote loop's cohort, the warm-start refit's cohort) hold tens of
+thousands of ratings at sf0.1 and a few million at 27x, so the table
+comes to the driver once as ``(user_id, item_id, rating)`` and the
+alternation runs there.
 
 Each half-step is the closed-form ridge solve the antidote gradient
-already differentiates through (ml/antidote.py): for fixed V,
+differentiates through (ml/antidote.py): for fixed V,
 
-    u_i = (Σ_{j∈Ω_i} v_j v_jᵀ + λI)⁻¹ · Σ_{j∈Ω_i} x_ij v_j
+    u_i = (Σ_{j∈Ω_i} v_j v_jᵀ + λ·n_i·I)⁻¹ · Σ_{j∈Ω_i} x_ij v_j,
 
-so one U-step is ONE join (ratings ⋈ V) + ONE groupBy(user) emitting
-r(r+1)/2 Gram sums + r right-hand sums (44 doubles at rank 8, all JVM
-expressions), then an 8×8 batched ``np.linalg.solve`` over the per-user
-rows via mapInPandas — thousands of tiny solves vectorized into one
-LAPACK call per Arrow batch.  The V-step is symmetric.  Nothing is ever
-user×item dense; shuffled state is |users| (or |items|) × 44 doubles.
+with n_i = |Ω_i| (ALS-WR, the way Spark's ALS scales ``regParam``).
+The Gram and right-hand sums are r(r+1)/2 + r ``np.bincount`` passes
+over the rating rows, then one batched ``np.linalg.solve``; nothing is
+ever user×item dense.  Factors are plain arrays, so 'warm' is passing
+the previous ones back in.
 
-Scale shape: identical to MLlib's ALS dataflow (that is the point —
-the alternation IS joins + aggregations), but because the factor
-tables are plain DataFrames, a refit can START from the previous
-factors: after appending a day of new ratings, 2 warm alternations
-reach the RMSE a cold fit needs 4+ alternations for (measured by
-q_als_warmstart_refit's emitted trajectory and pinned by
-tests/test_round13_ops.py).  At 100 TB this is the difference between
-re-running the whole pipeline and an incremental nightly refit.
+A fit over more than ``MAX_RATINGS`` rating rows raises ``ValueError``;
+there is no degraded path to fall back to.  Peak arrays are about 64
+bytes per rating row (the gathered factors) plus r²·8 = 512 bytes per
+solved entity (the ridge systems): the antidote loop at 27× sf0.1
+(5.9M rows, 0.54M items) peaked at 0.79 GB above its 0.14 GB of
+index and rating arrays.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hints import broadcast_bounded
 from ..functions.local import local_frame
 from ..registry import spark_query
 from .recsys_data import ratings_df
 
 RANK = 8
 LAM = 0.1
-_TRI = [(p, q) for p in range(RANK) for q in range(p, RANK)]  # 36 upper-tri cells
+MAX_RATINGS = 1 << 23
 
 
-def _det_factors(keys: DataFrame, key_col: str, rank: int = RANK) -> DataFrame:
+class Ratings(NamedTuple):
+    """Rating rows indexed for the fit: ``u``/``i`` are row positions
+    into the ``users``/``items`` id arrays, ``x`` the ratings."""
+
+    users: np.ndarray
+    items: np.ndarray
+    u: np.ndarray
+    i: np.ndarray
+    x: np.ndarray
+
+
+def fetch_ratings(df: DataFrame) -> Ratings:
+    """One Arrow fetch of ``(user_id, item_id, rating)``, indexed with
+    ``np.unique`` (ids ascending, so the index is independent of
+    partitioning)."""
+    pdf = df.select(
+        "user_id", "item_id", F.col("rating").cast("double")
+    ).toPandas()
+    users, u = np.unique(pdf["user_id"].to_numpy(np.int64), return_inverse=True)
+    items, i = np.unique(pdf["item_id"].to_numpy(np.int64), return_inverse=True)
+    return Ratings(users, items, u, i, pdf["rating"].to_numpy(np.float64))
+
+
+def _det_factors(ids: np.ndarray, rank: int = RANK) -> np.ndarray:
     """Deterministic unit-scale init: f_p(key) = 0.5 + ((key*31 + p*17)
     mod 97)/970 — seed-free, engine-independent, no RNG."""
-    return keys.select(
-        key_col,
-        F.array(
-            *[
-                (
-                    F.lit(0.5)
-                    + ((F.col(key_col) * 31 + F.lit(p * 17)) % 97).cast("double")
-                    / F.lit(970.0)
-                )
-                for p in range(rank)
-            ]
-        ).alias("f"),
-    )
+    return 0.5 + ((ids[:, None] * 31 + np.arange(rank) * 17) % 97) / 970.0
 
 
-def _half_step(
-    ratings: DataFrame,
-    other: DataFrame,
-    solve_col: str,
-    other_col: str,
-    lam: float,
-    n_other: int,
-) -> DataFrame:
-    """One ALS half-step: re-solve ``solve_col``'s factors against the
-    fixed ``other`` factor table.  Returns (solve_col, f array<double>).
-
-    The factor side is broadcast while its MEASURED row count stays
-    bounded (one row per entity, r doubles wide), so each half-step
-    shuffles the ratings ONCE (the groupBy) instead of twice — beyond
-    the bound it degrades to a shuffle join, never an OOM."""
-    joined = ratings.join(
-        broadcast_bounded(
-            other.select(F.col(other_col).alias("__ok"), F.col("f").alias("vf")),
-            n_other,
-        ),
-        ratings[other_col] == F.col("__ok"),
-    )
-    aggs = [
-        F.sum(F.col("vf")[p] * F.col("vf")[q]).alias(f"g_{p}_{q}") for p, q in _TRI
-    ] + [
-        F.sum(F.col("vf")[p] * F.col("rating").cast("double")).alias(f"b_{p}")
-        for p in range(RANK)
-    ]
-    stats = joined.groupBy(solve_col).agg(*aggs)
-
-    def solve(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            A = np.zeros((n, RANK, RANK))
-            for p, q in _TRI:
-                col = pdf[f"g_{p}_{q}"].to_numpy()
-                A[:, p, q] = col
-                A[:, q, p] = col
-            A += lam * np.eye(RANK)
-            b = np.stack([pdf[f"b_{p}"].to_numpy() for p in range(RANK)], axis=1)
-            out = np.linalg.solve(A, b)  # batched LAPACK, one call per Arrow batch
-            yield pd.DataFrame(
-                {solve_col: pdf[solve_col], "f": [row.tolist() for row in out]}
-            )
-
-    return stats.mapInPandas(solve, f"{solve_col} bigint, f array<double>")
+def normal_equations(
+    rows: np.ndarray, cols: np.ndarray, x: np.ndarray, W: np.ndarray, n: int, lam: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """The ridge system of one half-step for the ``n`` entities indexed
+    by ``rows``, against the fixed factors ``W`` indexed by ``cols``:
+    A = Σ f fᵀ + λ·n_obs·I (n×r×r) and b = Σ x f (n×r)."""
+    r = W.shape[1]
+    G = np.ascontiguousarray(W.T)[:, cols]  # r × rows, one gather
+    A = np.empty((n, r, r))
+    for p in range(r):
+        for q in range(p, r):
+            A[:, p, q] = A[:, q, p] = np.bincount(rows, G[p] * G[q], n)
+    d = np.arange(r)
+    A[:, d, d] += lam * np.bincount(rows, minlength=n)[:, None]
+    b = np.stack([np.bincount(rows, x * G[p], n) for p in range(r)], axis=1)
+    return A, b
 
 
-def custom_als(
-    ratings: DataFrame,
+def half_step(
+    rows: np.ndarray, cols: np.ndarray, x: np.ndarray, W: np.ndarray, n: int, lam: float
+) -> np.ndarray:
+    """Re-solve the ``rows`` side's factors against fixed ``W``."""
+    A, b = normal_equations(rows, cols, x, W, n, lam)
+    return np.linalg.solve(A, b[..., None])[..., 0]
+
+
+def als(
+    R: Ratings,
     alternations: int,
     lam: float = LAM,
-    U: DataFrame | None = None,
-    V: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
+    U: np.ndarray | None = None,
+    V: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
     """Run ``alternations`` two-half-step rounds, optionally warm-
-    starting from previous factor tables.  localCheckpoint after each
-    table keeps the loop's plan flat (SURVEY §3.2).
+    starting from factors aligned with ``R.users`` / ``R.items``.
 
     Half-step ORDER depends on the seed (r6 ADVICE: a fixed U-first
     order silently discarded a passed-in U — the first half-step
     re-solved it from V, so only V actually seeded the refit):
 
     - cold / V-only seed → (U-step, V-step): U is re-derived from the
-      (possibly seeded) V, as before;
+      (possibly seeded) V, and the last half-step solves V;
     - U seeded → (V-step, U-step): the first solve CONSUMES the seeded
       U, so both factor tables genuinely warm-start the refit.
     """
-    # Entity counts are loop-invariant: measure once, reuse per step.
-    # r12: the cold path takes BOTH distinct counts from one
-    # aggregation instead of a distinct+count job per side
-    # (countDistinct(item_id) == the row count of the freshly built V
-    # by construction).  Checkpoints stay EAGER: an interleaved A/B of
-    # lazy checkpoints (materialize inside the consumer job) measured
-    # FLAT here and regressed the label-propagation loops ~15-20% —
-    # cache-on-compute inside a shuffle-heavy consumer job beats a
-    # dedicated materialization job on none of these shapes.
-    cold_v = V is None
-    if cold_v:
-        V = _det_factors(ratings.select("item_id").distinct(), "item_id")
-        V = V.localCheckpoint(eager=True)
-    if U is not None:
-        U = U.localCheckpoint(eager=True)
-    if U is not None:
-        n_items, n_users = V.count(), U.count()
-    elif cold_v:
-        row = ratings.agg(
-            F.countDistinct("item_id").alias("ni"),
-            F.countDistinct("user_id").alias("nu"),
-        ).first()
-        n_items, n_users = int(row["ni"]), int(row["nu"])
-    else:  # V seeded, U cold: V's bound must reflect the PASSED table
-        n_items = V.count()
-        n_users = ratings.select("user_id").distinct().count()
+    if len(R.x) > MAX_RATINGS:
+        raise ValueError(
+            f"{len(R.x)} rating rows exceed the driver-local ALS cap {MAX_RATINGS}"
+        )
+    nu, ni = len(R.users), len(R.items)
     u_seeded = U is not None
+    if V is None:
+        V = _det_factors(R.items)
     for _ in range(alternations):
         if u_seeded:
-            V = _half_step(ratings, U, "item_id", "user_id", lam, n_users).localCheckpoint(
-                eager=True
-            )
-            U = _half_step(ratings, V, "user_id", "item_id", lam, n_items).localCheckpoint(
-                eager=True
-            )
+            V = half_step(R.i, R.u, R.x, U, ni, lam)
+            U = half_step(R.u, R.i, R.x, V, nu, lam)
         else:
-            U = _half_step(ratings, V, "user_id", "item_id", lam, n_items).localCheckpoint(
-                eager=True
-            )
-            V = _half_step(ratings, U, "item_id", "user_id", lam, n_users).localCheckpoint(
-                eager=True
-            )
+            U = half_step(R.u, R.i, R.x, V, nu, lam)
+            V = half_step(R.i, R.u, R.x, U, ni, lam)
     return U, V
 
 
-def als_rmse(ratings: DataFrame, U: DataFrame, V: DataFrame) -> float:
-    """Train RMSE of u·v over the ratings — dot product via zip_with
-    in the JVM; one scalar aggregate."""
-    pred = (
-        ratings.join(U.select(F.col("user_id").alias("__u"), F.col("f").alias("uf")),
-                     ratings.user_id == F.col("__u"))
-        .join(V.select(F.col("item_id").alias("__i"), F.col("f").alias("vf")),
-              ratings.item_id == F.col("__i"))
-        .select(
-            (
-                F.aggregate(
-                    F.zip_with("uf", "vf", lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                - F.col("rating").cast("double")
-            ).alias("err")
-        )
+def als_rmse(R: Ratings, U: np.ndarray, V: np.ndarray) -> float:
+    """Train RMSE of u·v over the rating rows."""
+    err = np.einsum("nr,nr->n", U[R.u], V[R.i]) - R.x
+    return float(np.sqrt(np.mean(err * err)))
+
+
+def _add_new_day(R: Ratings) -> Ratings:
+    """A deterministic 'new day' of ratings: every cohort user whose id
+    is a multiple of 50 rates the 3 lowest item ids with 1 + (user +
+    item) mod 5; a (user, item) pair rated twice keeps the average.
+    Users and items are unchanged, so factors fitted on ``R`` align."""
+    nu_new = np.flatnonzero(R.users % 50 == 0)
+    ni_new = np.arange(min(3, len(R.items)))
+    u_new = np.repeat(nu_new, len(ni_new))
+    i_new = np.tile(ni_new, len(nu_new))
+    x_new = (1 + (R.users[u_new] + R.items[i_new]) % 5).astype(np.float64)
+    m = len(R.items)
+    pairs, inv = np.unique(
+        np.concatenate([R.u * m + R.i, u_new * m + i_new]), return_inverse=True
     )
-    [row] = pred.agg(F.sqrt(F.avg(F.col("err") * F.col("err")))).collect()
-    return float(row[0])
+    x = np.concatenate([R.x, x_new])
+    return R._replace(
+        u=pairs // m, i=pairs % m, x=np.bincount(inv, x) / np.bincount(inv)
+    )
 
 
 @spark_query("q_als_warmstart_refit")  # rows-only: float fixpoint trajectory
@@ -206,80 +171,28 @@ def q_als_warmstart_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2) a 'new day' of ratings arrives (deterministic synthetic rows
     for a slice of users); (3) WARM refit — ONE alternation starting
     from the previous factors.  Emits one row per phase with its
-    alternation count and train RMSE.  The quality claim — a 2-
-    alternation warm refit lands at or below the RMSE of a
-    4-alternation COLD refit of the updated table — is pinned by
+    alternation count and train RMSE.  The quality claim — a warm
+    refit lands at or below the RMSE of a COLD refit of the updated
+    table at the same alternation budget — is pinned by
     tests/test_round13_ops.py, which runs the cold-refit baseline this
-    query deliberately omits (iterative fits are the wall-clock; the
-    bench entry carries the mechanism, the test carries the
-    comparison).
+    query deliberately omits.
 
-    This is the incremental-nightly-refit pattern a 100 TB recommender
-    needs and MLlib's ALS cannot express (no factor seeding API); the
-    custom alternation makes factors plain DataFrames, so 'warm' is
-    just passing them back in."""
-    # Right-size the SHUFFLE width to the cohort for the whole refit
-    # (same scoped-conf pattern as the streaming queries'
-    # _STREAM_SHUFFLE_PARTITIONS): every half-step's groupBy otherwise
-    # spreads a few-k-row aggregation over 32 shuffle partitions —
-    # measured at sf0.1: 10.1 s at 32 parts vs 7.8 s at 8, pure task
-    # scheduling.  On a real cluster this is the partitions-per-cohort
-    # knob, scaled UP with data volume (~50k rows/partition).
-    conf = spark.conf
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _warmstart_refit_body(spark, sf_dir)
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _warmstart_refit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = (
+    One Arrow fetch of the cohort; the new day, both fits and both
+    RMSEs run on the driver."""
+    base = fetch_ratings(
         ratings_df(spark, sf_dir)
         .filter(F.col("user_id") % 20 == 0)
         .groupBy("user_id", "item_id")
         .agg(F.avg("rating").alias("rating"))
     )
-    # right-size partitions to the cohort: a few-k-row table spread
-    # over 32 partitions pays 32 tasks x many stages x 10 half-steps
-    # of pure scheduling; at larger SFs the same formula scales the
-    # count back up (~50k rows/partition)
-    base = base.coalesce(8).localCheckpoint(eager=True)
-    U0, V0 = custom_als(base, alternations=2)
-    rmse_cold = als_rmse(base, U0, V0)
-
-    # 'new day': every 50th user rates item (user*7 mod item-universe)
-    # — deterministic, disjoint-ish, rating law fixed
-    items = base.select("item_id").distinct()
-    new_rows = (
-        base.select("user_id")
-        .distinct()
-        .filter(F.col("user_id") % 50 == 0)
-        .crossJoin(items.orderBy("item_id").limit(3))
-        .select(
-            "user_id",
-            "item_id",
-            (1 + (F.col("user_id") + F.col("item_id")) % 5).cast("double").alias(
-                "rating"
-            ),
-        )
-    )
-    updated = (
-        base.unionByName(new_rows)
-        .groupBy("user_id", "item_id")
-        .agg(F.avg("rating").alias("rating"))
-        .localCheckpoint(eager=True)
-    )
-
-    Uw, Vw = custom_als(updated, alternations=1, U=U0, V=V0)
-    rmse_warm = als_rmse(updated, Uw, Vw)
-
+    U0, V0 = als(base, alternations=2)
+    updated = _add_new_day(base)
+    Uw, Vw = als(updated, alternations=1, U=U0, V=V0)
     return local_frame(
         spark,
         [
-            ("cold_fit_base", 2, round(rmse_cold, 6)),
-            ("warm_refit_updated", 1, round(rmse_warm, 6)),
+            ("cold_fit_base", 2, round(als_rmse(base, U0, V0), 6)),
+            ("warm_refit_updated", 1, round(als_rmse(updated, Uw, Vw), 6)),
         ],
         "phase STRING, alternations INT, rmse DOUBLE",
     )

@@ -5,21 +5,25 @@ small budget of k synthetic user rows X̃ to the ratings matrix and
 optimize their values by projected gradient descent so a societal
 objective (here: polarization, §5.1) improves after retraining.
 
-Spark-first decomposition (SURVEY §1.1 D5, §3.2):
+Decomposition (SURVEY §1.1 D5, §3.2):
 
 - X̃ is k×m with k ≈ 1% of users — driver-local numpy BY DESIGN;
   state that fits on the driver stays on the driver.
-- everything that scales with DATA is distributed: ALS retraining
-  (MLlib), per-item prediction statistics (DataFrame aggs collected as
-  m-row summaries), and prediction serving.
-- the gradient uses the paper's fixed-V linearization: for fixed item
+- ALS retraining runs on the driver too (ml/als_custom.py): the loop's
+  cohort comes to the driver in one Arrow fetch and every retrain fits
+  cohort ∪ X̃ in numpy, so X̃ never enters Spark.  The fit raises past
+  ``als_custom.MAX_RATINGS`` rating rows (27× the sf0.1 loop is about
+  6M, under the 8.4M cap) instead of degrading.  Polarization and the
+  bilevel gradient (fixed U, through the fit's last V-step) come from
+  the same arrays.
+- the one-step keys use the paper's fixed-V linearization: for fixed item
   factors V, ridge-solved predictions are LINEAR in the ratings,
   X̂ = X̃·B(V) with B = V(VᵀV+λI)⁻¹Vᵀ, so ∂R/∂X̃ is closed-form —
   no differentiating through the ALS iteration.
-- at 100 TB (m too large for the driver), the same math shards by
-  item block: B·v products become applyInPandas over itemFactors,
-  identical formulas per block; nothing in the algebra requires a
-  dense m×m B (B = V·M·Vᵀ is applied as three skinny products).
+- q_antidote_grad_sharded is the distributed form of that fixed-V
+  step (m too large for the driver): the same math shards by item
+  block, and nothing in the algebra requires a dense m×m B (B = V·M·Vᵀ
+  is applied as three skinny products).
 
 The numpy core below is golden-tested against finite differences in
 ``tests/test_antidote_numpy.py`` (SURVEY §5.2).
@@ -28,13 +32,12 @@ The numpy core below is golden-tested against finite differences in
 from __future__ import annotations
 
 import numpy as np
-from pyspark.ml.recommendation import ALS
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hints import broadcast_bounded
 from ..functions.local import local_frame
 from ..registry import spark_query
+from .als_custom import als, fetch_ratings, normal_equations
 from .recsys_data import ratings_df
 
 RATING_LO, RATING_HI = 1.0, 5.0
@@ -106,116 +109,45 @@ def _det_factors(m: int, rank: int) -> np.ndarray:
     return (((j + 1) * 7 + (f + 1) * 13) % 11) / 11.0 - 0.5
 
 
-def fused_item_summary(
-    pred: DataFrame, uf: DataFrame, rank: int, n_users: int | None = None
-) -> DataFrame:
-    """The ONE fused per-item summary pass of the bilevel gradient
-    (r7 budget work) — everything the driver-side assembly needs in a
-    single m-row aggregation over pred⋈userFactors:
-
-      n_obs, μ_j, var_j           (polarization + gradient scale)
-      pf_p = Σ_i x̂_ij·u_ip        (the Σ x̂·u half of g_j)
-      sf_p = Σ_i u_ip             (the μ·Σu half of g_j)
-      a_pq = Σ_i u_ip·u_iq        (A_j's original-observer triangle)
-
-    The old shape ran three data-sized jobs (μ/var stats, g_j over
-    pred⋈μ⋈uf, A_j over combined⋈uf) plus a checkpoint; the algebra
-    g_j = Σ(x̂−μ)·u = Σx̂·u − μ·Σu removes all but this one pass.
-    Equivalence to the naive three-job form and to a pure-numpy replay
-    is test-pinned in tests/test_antidote_fused.py (r7 VERDICT #1).
-
-    MLlib emits float32 predictions/factors; without the explicit
-    double casts below Spark would round every PRODUCT to float32
-    before summing (float*float→float), costing ~7 significant digits
-    exactly where the Σx̂·u − μ·Σu cancellation needs them (measured:
-    1e-7 → 1e-12 relative error vs the float64 replay).
-
-    ``n_users`` (optional): measured user-factor row count — when
-    given, the factor side is broadcast via the bounded hint (r12:
-    the un-hinted join planned sort-merge because factor-table size
-    estimates are unknown post-RDD, shuffling the prediction rows by
-    user per iteration; one row per user × rank doubles is
-    comfortably bounded at any bench SF and degrades to the shuffle
-    join past the limit)."""
-    p_d = F.col("prediction").cast("double")
-
-    def f_d(p: int):
-        return F.col("features")[p].cast("double")
-
-    if n_users is not None:
-        uf = broadcast_bounded(uf, n_users)
-    return (
-        pred.join(uf, "user_id")
-        .groupBy("item_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.avg(p_d).alias("mu"),
-            F.var_pop(p_d).alias("v"),
-            *[F.sum(p_d * f_d(p)).alias(f"pf{p}") for p in range(rank)],
-            *[F.sum(f_d(p)).alias(f"sf{p}") for p in range(rank)],
-            *[
-                F.sum(f_d(p) * f_d(q)).alias(f"a{p}_{q}")
-                for p in range(rank)
-                for q in range(p, rank)
-            ],
-        )
-    )
+def _item_deviations(i: np.ndarray, pred: np.ndarray, m: int):
+    """Per-item observer counts n_j and per-row deviations x̂_ij − μ_j."""
+    n = np.bincount(i, minlength=m)
+    return n, pred - (np.bincount(i, pred, m) / n)[i]
 
 
-def bilevel_grad_from_summary(
-    s_rows,
-    item_index: dict,
-    U_ant: dict[int, np.ndarray],
-    k: int,
-    rank: int,
-    lam: float,
-    antidote_uid: int,
+def polarization_rows(i: np.ndarray, pred: np.ndarray, m: int) -> float:
+    """R_pol = (1/m)·Σ_j (1/n_j)·Σ_{i∈Ω_j} (x̂_ij − μ_j)² over rating
+    rows with item positions ``i`` and predictions ``pred`` [§5.1]."""
+    n, dev = _item_deviations(i, pred, m)
+    return float(np.mean(np.bincount(i, dev * dev, m) / n))
+
+
+def bilevel_grad(
+    u: np.ndarray,
+    i: np.ndarray,
+    pred: np.ndarray,
+    U: np.ndarray,
+    A: np.ndarray,
+    U_ant: np.ndarray,
 ) -> np.ndarray:
-    """Driver-side k×m bilevel-gradient assembly from the m collected
-    summary rows (see ``fused_item_summary``) plus the k antidote
-    factor vectors:
+    """k×m gradient of ``polarization_rows`` w.r.t. the antidote block,
+    from the original users' rating rows ``(u, i)`` and predictions,
+    the user factors ``U``, the k antidote user factors ``U_ant`` and
+    the item-side ridge systems ``A`` (m×r×r) of the fit's last V-step:
 
-        grad[a, j] = (2/(m·n_j)) · g_jᵀ · A_j⁻¹ · u_a
-        A_j = λI + Σ_{i∈origΩ_j} u_i·u_iᵀ + Σ_a u_a·u_aᵀ
+        grad[a, j] = (2/(m·n_j)) · g_jᵀ · A_j⁻¹ · u_a,
+        g_j = Σ_{i∈Ω_j} (x̂_ij − μ_j) · u_i,
 
-    The antidote users are FULLY observed, so their A-contribution is
-    the same r×r matrix for every item — added once here instead of
-    shuffling the antidote block through the join."""
-    m = len(item_index)
-    A_ant = np.zeros((rank, rank))
-    for ua in U_ant.values():
-        A_ant += np.outer(ua, ua)
-
-    G = np.zeros((m, rank))
-    A = np.tile(lam * np.eye(rank) + A_ant, (m, 1, 1))
-    N = np.ones(m)
-    for r in s_rows:
-        i = item_index.get(r["item_id"])
-        if i is None:
-            continue
-        mu_i = r["mu"] or 0.0
-        # g_j as Σx̂·u − μ·Σu cancels two same-magnitude sums, losing
-        # precision when the per-item prediction spread is much smaller
-        # than the mean — safe HERE because the gradient is only ever
-        # used max-normalized (direction), but any future consumer of G
-        # unnormalized must revisit this accumulation (SCALE.md note).
-        G[i] = [
-            (r[f"pf{p}"] or 0.0) - mu_i * (r[f"sf{p}"] or 0.0) for p in range(rank)
-        ]
-        N[i] = r["n_obs"]
-        for p in range(rank):
-            for q in range(p, rank):
-                v = r[f"a{p}_{q}"] or 0.0
-                A[i, p, q] += v
-                if p != q:
-                    A[i, q, p] += v
-    ainv_g = np.stack([np.linalg.solve(A[i], G[i]) for i in range(m)])
-    grad = np.zeros((k, m))
-    for a in range(k):
-        ua = U_ant.get(antidote_uid + a)
-        if ua is not None:
-            grad[a] = (2.0 / (m * N)) * (ainv_g @ ua)
-    return grad
+    with Ω_j the original observers of item j.  For fixed U, x̃_aj
+    enters only b_j of A_j·v_j = b_j (the antidote users observe every
+    item), so A_j⁻¹·u_a is ∂v_j/∂x̃_aj under the fit's own regulariser."""
+    m = len(A)
+    n, dev = _item_deviations(i, pred, m)
+    G = np.stack(
+        [np.bincount(i, dev * U[u, p], m) for p in range(U.shape[1])], axis=1
+    )
+    ainv_g = np.linalg.solve(A, G[..., None])[..., 0]
+    return (2.0 / (m * n)) * (U_ant @ ainv_g.T)
 
 
 @spark_query("q_antidote_step")  # rows-only: golden-tested vs numpy in tests/
@@ -249,192 +181,83 @@ def q_antidote_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-antidote baseline (iteration = -1).
 
     The gradient is the paper's fixed-U half-step derivative THROUGH
-    the item-factor update: V_j solves the ridge system A_j·V_j = b_j
-    with A_j = Σ_{i∈Ω_j} u_i·u_iᵀ + λI, and the antidote user a (fully
-    observed) shifts every V_j, so
+    the item-factor update (``bilevel_grad``): V_j solves the ridge
+    system A_j·V_j = b_j of the fit's last V-step, and the antidote
+    user a (fully observed) shifts every V_j through b_j.
 
-        ∂R_pol/∂x̃_{a,j} = (2/(m·n_j)) · g_jᵀ · A_j⁻¹ · u_a,
-        g_j = Σ_{i∈orig Ω_j} (x̂_ij − μ_j)·u_i.
-
-    Distribution contract per iteration (the 100 TB shape):
-      - retrain: MLlib ALS on the combined ratings;
-      - summaries: ONE fused wide aggregation over pred⋈userFactors
-        (μ_j, var_j, n_j, Σ x̂·u, Σ u, and the r(r+1)/2 outer-product
-        sums for A_j's original-observer part) — an m-row result,
-        never data-sized.  g_j = Σ x̂·u − μ_j·Σ u by linearity, and
-        the fully-observed antidote users contribute the SAME
-        Σ_a u_a·u_aᵀ to every A_j, added driver-side from the k
-        collected factor rows;
-      - driver: k×m gradient assembly from the summaries + the k
-        antidote factor rows; normalized 0.5-rating-unit step,
-        projected to the rating box;
-      - lineage: every iteration rebuilds from base + a fresh antidote
-        DataFrame (constant plan depth — SURVEY §3.2).
+    Where it runs: the cohort (a deterministic 20% of users) comes to
+    the driver in ONE Arrow fetch; every fit, prediction, polarization
+    and gradient is numpy over those arrays plus the k×m block
+    (ml/als_custom.py).  The fit raises past ``MAX_RATINGS`` rating rows
+    instead of degrading.  Fits: the baseline and the first retrain run
+    5 alternations from the deterministic init; the last retrain starts
+    from the previous retrain's V and runs 2.  A V-only warm start keeps
+    the V-step last, so A_j is still the last fit's own system.
 
     Efficient mode (r4 VERDICT #4): the middle iteration is RETRAIN-
     FREE — the bilevel gradient depends on X̃ only through the trained
-    model's summaries, so between retrains the last computed gradient
-    remains the valid descent direction and is re-applied as small
-    projected sub-steps (clipping makes repeated sub-steps ≠ one big
-    step; the box re-activates per sub-step).  Deployed predictions
-    don't move until the next retrain, so that iteration's trajectory
-    row honestly repeats the measured polarization; the refined X̃
-    pays off at the final retrain.  Cost: 3 ALS fits instead of 4 —
-    the fits ARE the loop's wall time (r4 bench: 24.9 s, ~6 s/fit at
-    sf0.1).  (The fixed-V closed form X̂ = X̃·B(V) was tried as the
-    half-step surrogate first: it optimizes the ANTIDOTE block's own
+    model, so between retrains the last computed gradient remains the
+    valid descent direction and is re-applied as small projected
+    sub-steps (clipping makes repeated sub-steps ≠ one big step; the
+    box re-activates per sub-step).  Deployed predictions don't move
+    until the next retrain, so that iteration's trajectory row honestly
+    repeats the measured polarization; the refined X̃ pays off at the
+    final retrain.  (The fixed-V closed form X̂ = X̃·B(V) was tried as
+    the half-step surrogate first: it optimizes the ANTIDOTE block's own
     prediction spread, which measurably regressed the original-user
     objective after retrain — 0.77 → 0.86 at both sf0.001/sf0.01 —
     so the gradient-continuation form is used instead.)
 
-    Measured at sf0.001: baseline 1.0346 → best 0.7781 (-24.8%),
-    reproducing the paper's antidote effect direction.  Runs on a
-    deterministic 20% user cohort to bound retrain cost.  (r7: the
-    fused summary pass cut warm sf0.1 wall from ~19 s to ~14 s; the
-    trajectory values moved in the 3rd decimal because g_j is now
-    accumulated in the algebraically equivalent Σx̂·u − μ·Σu order.)
+    Measured: baseline → final polarization 1.0376 → 0.7586 (−26.9%)
+    at sf0.001, 1.0485 → 0.7975 (−23.9%) at sf0.01 and 1.0415 → 0.8121
+    (−22.0%) at sf0.1, reproducing the paper's antidote effect direction.
     """
-    k, rank, lam, iters = 5, 8, 0.1, 3
+    k, lam, iters = 5, 0.1, 3
     half_step_iters = {1}  # retrain-free iterations
-    antidote_uid = 1_000_000_000
-    base = ratings_df(spark, sf_dir).filter(F.col("user_id") % 5 == 0)
-    base = base.groupBy("user_id", "item_id").agg(F.avg("rating").alias("rating"))
-    base = base.cache()
+    cohort = fetch_ratings(
+        ratings_df(spark, sf_dir)
+        .filter(F.col("user_id") % 5 == 0)
+        .groupBy("user_id", "item_id")
+        .agg(F.avg("rating").alias("rating"))
+    )
+    n_users, m = len(cohort.users), len(cohort.items)
+    # antidote user a sits at row n_users + a and rates every item
+    combined = cohort._replace(
+        users=np.concatenate([cohort.users, 1_000_000_000 + np.arange(k)]),
+        u=np.concatenate([cohort.u, np.repeat(n_users + np.arange(k), m)]),
+        i=np.concatenate([cohort.i, np.tile(np.arange(m), k)]),
+    )
 
-    item_ids = [
-        r[0] for r in base.select("item_id").distinct().orderBy("item_id").collect()
-    ]
-    m = len(item_ids)
-    item_index = {j: idx for idx, j in enumerate(item_ids)}
+    def predict(U, V):
+        return np.einsum("nr,nr->n", U[cohort.u], V[cohort.i])
 
-    # ALS block count sized to the data, not the default 10: MLlib's
-    # per-iteration cost has a fixed per-block scheduling/shuffle floor
-    # (10 blocks -> 100 user x item block pairs), which dominates when
-    # blocks hold only ~10k ratings.  Target ~60k ratings/block —
-    # measured at sf0.1 (119k cohort ratings): 10 blocks = 4.7 s/fit,
-    # 4 blocks = 2.0 s/fit, identical learning quality.  At 100 TB the
-    # same formula scales blocks UP with the cohort so a block never
-    # outgrows executor memory — this is the knob's actual purpose.
-    # One aggregation returns both loop-invariant counts (r12: was a
-    # count() job plus a distinct().count() job — two full passes over
-    # the data-sized cohort table; count/countDistinct are exact, so
-    # als_blocks and the broadcast bound are unchanged).  NOTE
-    # (r12 ADVICE): countDistinct ignores NULLs where the replaced
-    # distinct().count() counted a NULL group — equivalent here ONLY
-    # because the cohort filter (user_id % 5 == 0) guarantees non-null
-    # user_id; revisit this line if that filter ever changes.
-    _counts = base.agg(
-        F.count(F.lit(1)).alias("n_ratings"),
-        F.countDistinct("user_id").alias("n_users"),
-    ).first()
-    n_ratings = int(_counts["n_ratings"])
-    als_blocks = max(2, min(64, int(n_ratings // 60_000) or 2))
-    # user-factor row bound for the fused summary's broadcast hint
-    # (combined users = cohort users + the k antidote users; constant
-    # across iterations, so measured once)
-    n_users = int(_counts["n_users"]) + k
-
-    def _fit(df):
-        als = ALS(
-            userCol="user_id",
-            itemCol="item_id",
-            ratingCol="rating",
-            rank=rank,
-            regParam=lam,
-            maxIter=5,
-            seed=42,
-            coldStartStrategy="drop",
-            numUserBlocks=als_blocks,
-            numItemBlocks=als_blocks,
-        )
-        return als.fit(df)
-
-    def _orig_pred(model):
-        """Original-user predictions under the current model.  Lazy —
-        each iteration has exactly ONE action reading it (the fused
-        summary aggregation below), so the factor-join transform runs
-        once per iteration with no checkpoint materialization job."""
-        return model.transform(base).filter(F.col("prediction").isNotNull())
-
-    def _orig_item_stats(pred):
-        return (
-            pred.groupBy("item_id")
-            .agg(
-                F.avg("prediction").alias("mu"),
-                F.count(F.lit(1)).alias("n_obs"),
-                F.var_pop("prediction").alias("v"),
-            )
-        )
-
-    trajectory = []
-    baseline_model = _fit(base)
-    base_stats = _orig_item_stats(_orig_pred(baseline_model)).collect()
-    baseline_pol = float(np.mean([r["v"] for r in base_stats])) if base_stats else 0.0
-    trajectory.append((-1, baseline_pol, len(base_stats)))
+    U, V = als(cohort, 5, lam)
+    baseline_pol = polarization_rows(cohort.i, predict(U, V), m)
+    trajectory = [(-1, baseline_pol)]
 
     X_t = _det_init(k, m)
-    last_grad = None
+    V_warm, last_grad = None, None
     for it in range(iters):
         if it in half_step_iters and last_grad is not None:
-            # Retrain-free half-step: the bilevel gradient is a
-            # function of the TRAINED model's summaries (A_j, g_j,
-            # U_ant), none of which move until the next retrain — so
-            # between retrains the valid descent direction is the last
-            # computed gradient, applied as a further projected step
-            # (clipping makes repeated sub-steps ≠ one big step).  The
-            # deployed model is untouched, so the measured original-
-            # user polarization is unchanged — repeat the last
-            # measurement honestly; the refined X̃ pays off at the
-            # next retrain.
             gmax = float(np.abs(last_grad).max()) or 1.0
             for _ in range(HALF_SUB_STEPS):
                 X_t = np.clip(
                     X_t - (HALF_SUB_ETA / gmax) * last_grad, RATING_LO, RATING_HI
                 )
-            prev_it, prev_pol, prev_n = trajectory[-1]
-            trajectory.append((it, prev_pol, prev_n))
+            trajectory.append((it, trajectory[-1][1]))
             continue
-        antidote_rows = [
-            (antidote_uid + u, int(item_ids[j]), float(X_t[u, j]))
-            for u in range(k)
-            for j in range(m)
-        ]
-        antidote_df = local_frame(
-            spark, antidote_rows, "user_id BIGINT, item_id BIGINT, rating DOUBLE"
-        )
-        combined = base.unionByName(antidote_df)
-        model = _fit(combined)
+        R = combined._replace(x=np.concatenate([cohort.x, X_t.ravel()]))
+        U, V_warm = als(R, 5 if V_warm is None else 2, lam, V=V_warm)
+        A, _ = normal_equations(R.i, R.u, R.x, U, m, lam)  # the last V-step's system
+        pred = predict(U, V_warm)
+        trajectory.append((it, polarization_rows(cohort.i, pred, m)))
+        last_grad = bilevel_grad(cohort.u, cohort.i, pred, U, A, U[n_users:])
+        gmax = float(np.abs(last_grad).max()) or 1.0
+        X_t = np.clip(X_t - (0.5 / gmax) * last_grad, RATING_LO, RATING_HI)
 
-        uf = model.userFactors.withColumnRenamed("id", "user_id")
-
-        # ONE fused summary pass per iteration — see fused_item_summary
-        # for the algebra (g_j = Σx̂·u − μ·Σu; antidote A-contribution
-        # added driver-side since it is item-invariant).  A_j's
-        # original-observer part comes from the same pred⋈uf join
-        # (every combined user and item is in training, so factor rows
-        # exist for all and the inner joins are lossless).
-        s_rows = fused_item_summary(_orig_pred(model), uf, rank, n_users=n_users).collect()
-        pol = float(np.mean([r["v"] for r in s_rows])) if s_rows else 0.0
-        trajectory.append((it, pol, len(s_rows)))
-
-        U_ant = {
-            r["user_id"]: np.array(r["features"], dtype=np.float64)
-            for r in uf.filter(F.col("user_id") >= antidote_uid).collect()
-        }
-        grad = bilevel_grad_from_summary(
-            s_rows, item_index, U_ant, k, rank, lam, antidote_uid
-        )
-        gmax = float(np.abs(grad).max()) or 1.0
-        X_t = np.clip(X_t - (0.5 / gmax) * grad, RATING_LO, RATING_HI)
-        last_grad = grad
-
-    base.unpersist()
     return local_frame(
         spark,
-        [
-            (it, round(p, 6), n, round(baseline_pol - p, 6))
-            for it, p, n in trajectory
-        ],
+        [(it, round(p, 6), m, round(baseline_pol - p, 6)) for it, p in trajectory],
         "iteration INT, polarization DOUBLE, n_items INT, improvement_vs_baseline DOUBLE",
     )
 

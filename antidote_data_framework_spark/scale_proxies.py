@@ -70,9 +70,12 @@ SCALE_PROXIES: dict[str, str] = {
     "q_reagg_hll_sketch": "q_agg_rollup",
     # rank-target windows per group (WINDOW over lineitem)
     "q_agg_exact_median_mode": "q_equidepth_histogram",
-    # --- als / antidote: iterative ALS fits dominate ---
+    # --- als: MLlib ALS fits dominate ---
     "q_als_rmse_gate": "q_als_train_predict",
     "q_als_recommend_topk": "q_als_recommend_ann",
+    # --- antidote: driver-local numpy algebra into a LocalRelation; the
+    # loop runs the same algebra after one Arrow fetch of its cohort,
+    # the step keys on a fixed k×m block (their curve is flat) ---
     "q_antidote_step": "q_antidote_loop",
     "q_antidote_step_fairness": "q_antidote_loop",
     # --- bloom / bucketing ---

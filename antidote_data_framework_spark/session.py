@@ -7,7 +7,7 @@ Local-mode defaults that still encode the cluster posture:
   from burning the cluster.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster this would be ~2-3x total executor cores (AQE coalesces down).
-- Arrow on: every pandas exchange (the antidote gradient carrier, the
+- Arrow on: every pandas exchange (the driver-local ALS fetch, the
   multimodal UDFs) crosses the Python boundary in columnar batches.
   Rows built on the driver enter Spark through ``functions/local.py``
   as an Arrow table, which plans as a JVM ``LocalRelation`` and starts
@@ -81,7 +81,7 @@ def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Pin BLAS/OpenMP to one thread per executor Python worker
         # (r12 VERDICT #2 / guide §4): the Arrow-batch numpy kernels
-        # (q_als_recommend_ann's matmul, the antidote gradient stages,
+        # (q_als_recommend_ann's matmul,
         # PCA partials) run in up to `cpus` CONCURRENT Python workers —
         # a threaded BLAS inside each worker oversubscribes the box by
         # the BLAS thread count (this host's OpenBLAS is built

@@ -73,8 +73,6 @@ COUNTERS = ("build_jobs", "jobs", "stages", "tasks", "shuffle_write_bytes", "bat
 # q_cogroup_align (11/12 tasks); the compare reports them.
 BYTE_TOLERANCE = {
     "q_als_rmse_gate": 163_163,
-    "q_als_warmstart_refit": 646,
-    "q_antidote_loop": 574_136,
     "q_attribution_touch": 176,
     "q_cogroup_align": 124,
     "q_embed_gram": 87,

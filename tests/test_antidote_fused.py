@@ -1,283 +1,120 @@
-"""Equivalence pin for the r7 fused antidote summary algebra (r7 VERDICT #1).
+"""Pins for the antidote loop's array gradient (ml/antidote.bilevel_grad
+and polarization_rows):
 
-The round-7 budget work rewrote q_antidote_loop's per-iteration gradient
-assembly from three data-sized jobs (μ/var stats; g_j over pred⋈μ⋈uf;
-A_j over combined⋈uf) into ONE fused m-row aggregation
-(ml/antidote.fused_item_summary) plus a driver-side assembly
-(ml/antidote.bilevel_grad_from_summary).  The trajectory moved in the
-3rd decimal, and until now the only gate was "polarization still goes
-down".  These tests pin the rewrite both ways:
-
-- fused vs the NAIVE three-job Spark shape on a synthetic partial-
-  observation frame, np.allclose(rtol=1e-10) per antidote cell;
-- fused vs a PURE-NUMPY replay of the paper's math
+- against a PURE-NUMPY row-by-row replay of the paper's math
   (grad[a,j] = (2/(m·n_j))·g_jᵀ·A_j⁻¹·u_a with
-  g_j = Σ_{i∈Ω_j}(x̂_ij − μ_j)·u_i, A_j = λI + Σ_obs u·uᵀ + Σ_ant u·uᵀ)
-  computed row-by-row from the same inputs;
-- one FULL fused iteration on the real sf fixture (actual ALS model,
-  the loop's own cohort) vs the numpy replay — the full-iteration
-  equivalence modulo the (shared) ALS fit.
+  g_j = Σ_{i∈Ω_j}(x̂_ij − μ_j)·u_i, A_j = λ·n_j·I + Σ_obs u·uᵀ + Σ_ant u·uᵀ,
+  n_j counting the antidote observers) computed from the same inputs;
+- against finite differences of the polarization after a fixed-U
+  V-half-step of the fit (ml/als_custom.half_step): the gradient must
+  be the derivative of the model the fit actually trains.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
+from antidote_data_framework_spark.ml.als_custom import half_step, normal_equations
 from antidote_data_framework_spark.ml.antidote import (
-    bilevel_grad_from_summary,
-    fused_item_summary,
+    bilevel_grad,
+    polarization_rows,
 )
 
 RANK = 3
 LAM = 0.1
 K = 2
-ANTIDOTE_UID = 1_000_000_000
-ITEM_IDS = [10, 20, 30, 40]
+N_ORIG = 5
+M = 4
+
+# Partial observation by the original users (item 3 has a single
+# observer), so the 1/n_j scale and var_pop edge cases are exercised.
+PRED_ROWS = [
+    (0, 0, 3.2), (0, 1, 4.1), (0, 2, 2.7),
+    (1, 0, 1.9), (1, 1, 3.3),
+    (2, 0, 4.8), (2, 2, 3.9), (2, 3, 2.2),
+    (3, 1, 2.8), (3, 2, 4.4),
+    (4, 0, 3.0), (4, 1, 3.7), (4, 2, 1.5),
+]
 
 
-def _feat(u: int) -> list[float]:
-    """Deterministic factor vector per user id (original + antidote)."""
-    return [((u * 3 + p * 7) % 11) / 7.0 - 0.5 for p in range(RANK)]
-
-
-def _synthetic(spark):
-    """Partial-observation predictions (original users only) + factor
-    table for original AND antidote users.  Observation pattern varies
-    n_j per item (item 40 has a single observer) so the 1/n_j scale and
-    var_pop edge cases are both exercised."""
-    pred_rows = [
-        (1, 10, 3.2), (1, 20, 4.1), (1, 30, 2.7),
-        (2, 10, 1.9), (2, 20, 3.3),
-        (3, 10, 4.8), (3, 30, 3.9), (3, 40, 2.2),
-        (4, 20, 2.8), (4, 30, 4.4),
-        (5, 10, 3.0), (5, 20, 3.7), (5, 30, 1.5),
-    ]
-    pred = spark.createDataFrame(
-        pred_rows, "user_id BIGINT, item_id BIGINT, prediction DOUBLE"
+def _feats() -> np.ndarray:
+    """Deterministic factor rows: N_ORIG original users, then K antidote."""
+    return np.array(
+        [[((u * 3 + p * 7) % 11) / 7.0 - 0.5 for p in range(RANK)] for u in range(N_ORIG + K)]
     )
-    users = [1, 2, 3, 4, 5] + [ANTIDOTE_UID + a for a in range(K)]
-    uf = spark.createDataFrame(
-        [(u, _feat(u)) for u in users], "user_id BIGINT, features ARRAY<DOUBLE>"
-    )
-    return pred_rows, pred, uf
 
 
-def _fused_grad(pred, uf):
-    item_index = {j: i for i, j in enumerate(ITEM_IDS)}
-    s_rows = fused_item_summary(pred, uf, RANK).collect()
-    U_ant = {
-        r["user_id"]: np.array(r["features"], dtype=np.float64)
-        for r in uf.filter(F.col("user_id") >= ANTIDOTE_UID).collect()
-    }
-    grad = bilevel_grad_from_summary(
-        s_rows, item_index, U_ant, K, RANK, LAM, ANTIDOTE_UID
-    )
-    pol = float(np.mean([r["v"] for r in s_rows]))
-    return grad, pol, s_rows
+def _combined_rows(x_orig: np.ndarray, X_tilde: np.ndarray):
+    """Original rows plus the K fully-observing antidote users."""
+    u = np.array([r[0] for r in PRED_ROWS] + [N_ORIG + a for a in range(K) for _ in range(M)])
+    i = np.array([r[1] for r in PRED_ROWS] + [j for _ in range(K) for j in range(M)])
+    return u, i, np.concatenate([x_orig, X_tilde.ravel()])
 
 
-def _numpy_replay(pred_rows, user_feats: dict[int, np.ndarray]):
-    """The paper's math, accumulated row-by-row in plain numpy — no
-    algebraic rearrangement (g_j sums (x̂−μ)·u directly)."""
-    m = len(ITEM_IDS)
-    obs: dict[int, list[tuple[int, float]]] = {j: [] for j in ITEM_IDS}
-    for u, j, p in pred_rows:
-        obs[j].append((u, p))
-    A_ant = np.zeros((RANK, RANK))
-    for a in range(K):
-        ua = user_feats[ANTIDOTE_UID + a]
-        A_ant += np.outer(ua, ua)
-    grad = np.zeros((K, m))
+def test_fused_equals_pure_numpy_replay():
+    """The array path reproduces a row-by-row numpy replay of the
+    paper's unrearranged math — gradient AND measured polarization."""
+    U = _feats()
+    u = np.array([r[0] for r in PRED_ROWS])
+    i = np.array([r[1] for r in PRED_ROWS])
+    pred = np.array([r[2] for r in PRED_ROWS])
+    cu, ci, cx = _combined_rows(pred, np.ones((K, M)))
+    A, _ = normal_equations(ci, cu, cx, U, M, LAM)
+    grad = bilevel_grad(u, i, pred, U, A, U[N_ORIG:])
+    pol = polarization_rows(i, pred, M)
+
+    obs: dict[int, list[tuple[int, float]]] = {j: [] for j in range(M)}
+    for uu, j, p in PRED_ROWS:
+        obs[j].append((uu, p))
+    grad_np = np.zeros((K, M))
     variances = []
-    for idx, j in enumerate(ITEM_IDS):
+    for j in range(M):
         preds = np.array([p for _, p in obs[j]])
         mu = preds.mean()
         variances.append(float(((preds - mu) ** 2).mean()))
-        n = len(preds)
         g = np.zeros(RANK)
-        A = LAM * np.eye(RANK) + A_ant
-        for u, p in obs[j]:
-            fu = user_feats[u]
-            g += (p - mu) * fu
-            A += np.outer(fu, fu)
-        core = np.linalg.solve(A, g)
+        A_j = LAM * (len(preds) + K) * np.eye(RANK)
         for a in range(K):
-            grad[a, idx] = (2.0 / (m * n)) * core @ user_feats[ANTIDOTE_UID + a]
-    return grad, float(np.mean(variances))
-
-
-def test_fused_equals_naive_three_job(spark):
-    """The fused 1-pass aggregation reproduces the pre-r7 three-job
-    Spark shape cell-for-cell at rtol=1e-10."""
-    _, pred, uf = _synthetic(spark)
-    grad_fused, _, _ = _fused_grad(pred, uf)
-
-    # naive job 1: per-item stats
-    stats = pred.groupBy("item_id").agg(
-        F.avg("prediction").alias("mu"), F.count(F.lit(1)).alias("n_obs")
-    )
-    # naive job 2: g_j = Σ (x̂ − μ_j)·u over pred⋈μ⋈uf (the second pass
-    # the fused form eliminates by linearity)
-    g_rows = (
-        pred.join(stats, "item_id")
-        .join(uf, "user_id")
-        .groupBy("item_id")
-        .agg(
-            *[
-                F.sum(
-                    (F.col("prediction") - F.col("mu")) * F.col("features")[p]
-                ).alias(f"g{p}")
-                for p in range(RANK)
-            ]
-        )
-        .collect()
-    )
-    # naive job 3: A_j's observer part over pred⋈uf (full square, no
-    # triangle trick)
-    a_rows = (
-        pred.join(uf, "user_id")
-        .groupBy("item_id")
-        .agg(
-            *[
-                F.sum(F.col("features")[p] * F.col("features")[q]).alias(
-                    f"a{p}_{q}"
-                )
-                for p in range(RANK)
-                for q in range(RANK)
-            ]
-        )
-        .collect()
-    )
-    n_by_item = {r["item_id"]: r["n_obs"] for r in stats.collect()}
-    g_by_item = {r["item_id"]: np.array([r[f"g{p}"] for p in range(RANK)]) for r in g_rows}
-    a_by_item = {
-        r["item_id"]: np.array(
-            [[r[f"a{p}_{q}"] for q in range(RANK)] for p in range(RANK)]
-        )
-        for r in a_rows
-    }
-    A_ant = np.zeros((RANK, RANK))
-    feats = {ANTIDOTE_UID + a: np.array(_feat(ANTIDOTE_UID + a)) for a in range(K)}
-    for ua in feats.values():
-        A_ant += np.outer(ua, ua)
-    m = len(ITEM_IDS)
-    grad_naive = np.zeros((K, m))
-    for idx, j in enumerate(ITEM_IDS):
-        A = LAM * np.eye(RANK) + A_ant + a_by_item[j]
-        core = np.linalg.solve(A, g_by_item[j])
+            A_j += np.outer(U[N_ORIG + a], U[N_ORIG + a])
+        for uu, p in obs[j]:
+            g += (p - mu) * U[uu]
+            A_j += np.outer(U[uu], U[uu])
+        core = np.linalg.solve(A_j, g)
         for a in range(K):
-            grad_naive[a, idx] = (
-                2.0 / (m * n_by_item[j])
-            ) * core @ feats[ANTIDOTE_UID + a]
-    assert np.allclose(grad_fused, grad_naive, rtol=1e-10, atol=1e-14), (
-        grad_fused,
-        grad_naive,
-    )
+            grad_np[a, j] = (2.0 / (M * len(preds))) * core @ U[N_ORIG + a]
+    assert np.allclose(grad, grad_np, rtol=1e-10, atol=1e-14)
+    assert abs(pol - float(np.mean(variances))) < 1e-12
 
 
-def test_fused_equals_pure_numpy_replay(spark):
-    """The fused Spark path reproduces a row-by-row numpy replay of the
-    paper's unrearranged math — gradient AND measured polarization."""
-    pred_rows, pred, uf = _synthetic(spark)
-    grad_fused, pol_fused, _ = _fused_grad(pred, uf)
-    feats = {u: np.array(_feat(u)) for u in [1, 2, 3, 4, 5]}
-    feats.update(
-        {ANTIDOTE_UID + a: np.array(_feat(ANTIDOTE_UID + a)) for a in range(K)}
-    )
-    grad_np, pol_np = _numpy_replay(pred_rows, feats)
-    assert np.allclose(grad_fused, grad_np, rtol=1e-10, atol=1e-14)
-    assert abs(pol_fused - pol_np) < 1e-12
+def test_bilevel_grad_matches_finite_differences_of_v_step():
+    """Perturb x̃_aj, redo the fixed-U V-half-step (λ·n_j regulariser)
+    and re-measure the original users' polarization.  V is linear in
+    X̃ and R_pol quadratic in V, so central differences are exact up to
+    rounding and the tolerance is tight."""
+    U = _feats()
+    u = np.array([r[0] for r in PRED_ROWS])
+    i = np.array([r[1] for r in PRED_ROWS])
+    x_orig = np.array([r[2] for r in PRED_ROWS])
+    X_tilde = 1.0 + (np.arange(K * M).reshape(K, M) * 7 % 5)
 
+    def polarization_after_v_step(X):
+        cu, ci, cx = _combined_rows(x_orig, X)
+        V = half_step(ci, cu, cx, U, M, LAM)
+        return polarization_rows(i, np.einsum("nr,nr->n", U[u], V[i]), M)
 
-def test_full_iteration_matches_numpy_on_fixture(spark, sf_dir):
-    """One full fused iteration on the REAL fixture — the loop's own
-    cohort, a real MLlib ALS model — vs the numpy replay computed from
-    the collected predictions and factors.  Pins the production path
-    end-to-end modulo the (shared) ALS fit."""
-    from pyspark.ml.recommendation import ALS
+    cu, ci, cx = _combined_rows(x_orig, X_tilde)
+    V = half_step(ci, cu, cx, U, M, LAM)
+    A, _ = normal_equations(ci, cu, cx, U, M, LAM)
+    pred = np.einsum("nr,nr->n", U[u], V[i])
+    grad = bilevel_grad(u, i, pred, U, A, U[N_ORIG:])
 
-    from antidote_data_framework_spark.ml.antidote import _det_init
-    from antidote_data_framework_spark.ml.recsys_data import ratings_df
-
-    k, rank, lam = 5, 8, 0.1
-    base = (
-        ratings_df(spark, sf_dir)
-        .filter(F.col("user_id") % 5 == 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.avg("rating").alias("rating"))
-        .cache()
-    )
-    item_ids = [
-        r[0] for r in base.select("item_id").distinct().orderBy("item_id").collect()
-    ]
-    m = len(item_ids)
-    item_index = {j: i for i, j in enumerate(item_ids)}
-    X0 = _det_init(k, m)
-    antidote_rows = [
-        (ANTIDOTE_UID + u, int(item_ids[j]), float(X0[u, j]))
-        for u in range(k)
-        for j in range(m)
-    ]
-    antidote_df = spark.createDataFrame(
-        antidote_rows, "user_id BIGINT, item_id BIGINT, rating DOUBLE"
-    )
-    model = ALS(
-        userCol="user_id",
-        itemCol="item_id",
-        ratingCol="rating",
-        rank=rank,
-        regParam=lam,
-        maxIter=5,
-        seed=42,
-        coldStartStrategy="drop",
-        numUserBlocks=2,
-        numItemBlocks=2,
-    ).fit(base.unionByName(antidote_df))
-    uf = model.userFactors.withColumnRenamed("id", "user_id")
-    pred = model.transform(base).filter(F.col("prediction").isNotNull())
-
-    s_rows = fused_item_summary(pred, uf, rank).collect()
-    U_ant = {
-        r["user_id"]: np.array(r["features"], dtype=np.float64)
-        for r in uf.filter(F.col("user_id") >= ANTIDOTE_UID).collect()
-    }
-    grad_fused = bilevel_grad_from_summary(
-        s_rows, item_index, U_ant, k, rank, lam, ANTIDOTE_UID
-    )
-    pol_fused = float(np.mean([r["v"] for r in s_rows]))
-
-    pred_rows = [
-        (r["user_id"], r["item_id"], float(r["prediction"]))
-        for r in pred.select("user_id", "item_id", "prediction").collect()
-    ]
-    feats = {
-        r["user_id"]: np.array(r["features"], dtype=np.float64)
-        for r in uf.collect()
-    }
-    obs: dict[int, list[tuple[int, float]]] = {}
-    for u, j, p in pred_rows:
-        obs.setdefault(j, []).append((u, p))
-    A_ant = sum(np.outer(ua, ua) for ua in U_ant.values())
-    grad_np = np.zeros((k, m))
-    variances = []
-    for j, rows in obs.items():
-        idx = item_index[j]
-        preds = np.array([p for _, p in rows])
-        mu = preds.mean()
-        variances.append(float(((preds - mu) ** 2).mean()))
-        g = np.zeros(rank)
-        A = lam * np.eye(rank) + A_ant
-        for u, p in rows:
-            g += (p - mu) * feats[u]
-            A += np.outer(feats[u], feats[u])
-        core = np.linalg.solve(A, g)
-        for a in range(k):
-            grad_np[a, idx] = (2.0 / (m * len(rows))) * core @ U_ant[
-                ANTIDOTE_UID + a
-            ]
-    base.unpersist()
-    # accumulation order differs (Spark partial aggregation vs python
-    # row loop) — rtol must absorb only that, not algebra drift
-    assert np.allclose(grad_fused, grad_np, rtol=1e-8, atol=1e-12)
-    assert abs(pol_fused - float(np.mean(variances))) < 1e-9
+    h = 1e-3
+    fd = np.zeros((K, M))
+    for a in range(K):
+        for j in range(M):
+            Xp, Xm = X_tilde.copy(), X_tilde.copy()
+            Xp[a, j] += h
+            Xm[a, j] -= h
+            fd[a, j] = (polarization_after_v_step(Xp) - polarization_after_v_step(Xm)) / (2 * h)
+    assert np.abs(grad).max() > 1e-4  # a non-trivial gradient
+    assert np.allclose(grad, fd, rtol=1e-7, atol=1e-11), (grad, fd)

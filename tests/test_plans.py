@@ -222,6 +222,26 @@ def test_kmeans_fits_live_in_kmeans_module():
     )
 
 
+def test_mllib_als_lives_only_in_als_module():
+    """MLlib's ALS serves only the contract keys in ml/als.py.  The
+    antidote loop and the warm-start refit fit on the driver through
+    ml/als_custom.py (one Arrow fetch, numpy half-steps), so no other
+    engine file may import pyspark.ml.recommendation."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
+    bad = [
+        f"{py.relative_to(pkg).as_posix()}:{i}: {line.strip()}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py.relative_to(pkg).as_posix() != "ml/als.py"
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if "pyspark.ml.recommendation" in line
+    ]
+    assert not bad, (
+        "MLlib ALS outside ml/als.py — fit with ml/als_custom.als:\n" + "\n".join(bad)
+    )
+
+
 def test_driver_rows_enter_through_local_frame():
     """Rows the driver holds enter Spark through functions/local.py: an
     Arrow table that plans as a LocalRelation.  ``createDataFrame`` over

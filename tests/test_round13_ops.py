@@ -155,37 +155,33 @@ def test_star_components_handles_deep_chain(spark):
     assert got[700] == got[701] == got[702] == 700
 
 
-def test_custom_als_half_step_matches_numpy_ridge(spark):
-    """One distributed U-step must equal the closed-form ridge solve
-    u_i = (Σ v_j v_jᵀ + λI)⁻¹ Σ x_ij v_j computed directly in numpy on
-    a tiny known problem — the golden for the Gram-aggregation +
-    batched-LAPACK path."""
+def test_custom_als_half_step_matches_numpy_ridge():
+    """One U-step must equal the closed-form ALS-WR ridge solve
+    u_i = (Σ v_j v_jᵀ + λ·n_i·I)⁻¹ Σ x_ij v_j computed directly in numpy
+    on a tiny known problem — the golden for the bincount Gram sums +
+    batched-solve path.  User 2 skips item 3, so n_i varies."""
     import numpy as np
 
     from antidote_data_framework_spark.ml.als_custom import (
         RANK,
         _det_factors,
-        _half_step,
+        half_step,
     )
 
-    ratings = spark.createDataFrame(
-        [(u, i, float(1 + (u * 3 + i) % 5)) for u in range(3) for i in range(4)],
-        "user_id BIGINT, item_id BIGINT, rating DOUBLE",
-    )
-    V = _det_factors(ratings.select("item_id").distinct(), "item_id")
-    vmap = {r["item_id"]: np.array(r["f"]) for r in V.collect()}
+    cells = [(u, i) for u in range(3) for i in range(4) if (u, i) != (2, 3)]
+    rows = np.array([u for u, _ in cells])
+    cols = np.array([i for _, i in cells])
+    x = np.array([float(1 + (u * 3 + i) % 5) for u, i in cells])
+    V = _det_factors(np.arange(4))
     lam = 0.1
-    got = {
-        r["user_id"]: np.array(r["f"])
-        for r in _half_step(ratings, V, "user_id", "item_id", lam, 4).collect()
-    }
+    got = half_step(rows, cols, x, V, 3, lam)
     for u in range(3):
-        A = lam * np.eye(RANK)
+        obs = [i for uu, i in cells if uu == u]
+        A = lam * len(obs) * np.eye(RANK)
         b = np.zeros(RANK)
-        for i in range(4):
-            x = float(1 + (u * 3 + i) % 5)
-            A += np.outer(vmap[i], vmap[i])
-            b += x * vmap[i]
+        for i in obs:
+            A += np.outer(V[i], V[i])
+            b += float(1 + (u * 3 + i) % 5) * V[i]
         expect = np.linalg.solve(A, b)
         assert np.allclose(got[u], expect, atol=1e-9), u
 
@@ -195,52 +191,74 @@ def test_custom_als_warm_start_beats_cold_at_equal_budget(spark, sf_dir):
     arrive, a warm refit must reach at-or-better train RMSE than a
     cold refit given the SAME number of refit alternations, and
     training must improve monotonically with alternations from cold."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from antidote_data_framework_spark.ml.als_custom import (
+        als,
         als_rmse,
-        custom_als,
+        fetch_ratings,
     )
     from antidote_data_framework_spark.ml.recsys_data import ratings_df
 
-    base = (
+    base_df = (
         ratings_df(spark, sf_dir)
         .filter(F.col("user_id") % 20 == 0)
         .groupBy("user_id", "item_id")
         .agg(F.avg("rating").alias("rating"))
-        .coalesce(8)
         .localCheckpoint(eager=True)
     )
-    U1, V1 = custom_als(base, alternations=1)
-    U2, V2 = custom_als(base, alternations=2)
+    base = fetch_ratings(base_df)
+    U1, V1 = als(base, alternations=1)
+    U2, V2 = als(base, alternations=2)
     r1, r2 = als_rmse(base, U1, V1), als_rmse(base, U2, V2)
     assert r2 <= r1 + 1e-9, (r1, r2)
 
     new_rows = (
-        base.select("user_id")
+        base_df.select("user_id")
         .distinct()
         .filter(F.col("user_id") % 50 == 0)
-        .crossJoin(base.select("item_id").distinct().orderBy("item_id").limit(3))
+        .crossJoin(base_df.select("item_id").distinct().orderBy("item_id").limit(3))
         .select(
             "user_id",
             "item_id",
             (1 + (F.col("user_id") + F.col("item_id")) % 5).cast("double").alias("rating"),
         )
     )
-    updated = (
-        base.unionByName(new_rows)
+    updated = fetch_ratings(
+        base_df.unionByName(new_rows)
         .groupBy("user_id", "item_id")
         .agg(F.avg("rating").alias("rating"))
-        .coalesce(8)
-        .localCheckpoint(eager=True)
     )
-    Uw, Vw = custom_als(updated, alternations=2, U=U2, V=V2)
-    Uc, Vc = custom_als(updated, alternations=2)
+    # the new rows add no user or item, so the factors of ``base`` align
+    assert np.array_equal(updated.users, base.users)
+    assert np.array_equal(updated.items, base.items)
+    Uw, Vw = als(updated, alternations=2, U=U2, V=V2)
+    Uc, Vc = als(updated, alternations=2)
     rmse_warm = als_rmse(updated, Uw, Vw)
     rmse_cold = als_rmse(updated, Uc, Vc)
     # equal refit budget: starting from trained factors must not lose
     # to the deterministic cold init (5% slack for non-convex drift)
     assert rmse_warm <= rmse_cold * 1.05, (rmse_warm, rmse_cold)
+
+
+def test_custom_als_raises_past_row_cap(monkeypatch):
+    """Past MAX_RATINGS rows the fit raises; it never degrades."""
+    import numpy as np
+    import pytest
+
+    from antidote_data_framework_spark.ml import als_custom
+    from antidote_data_framework_spark.ml.als_custom import Ratings, als
+
+    R = Ratings(
+        np.arange(3), np.arange(2), np.repeat(np.arange(3), 2),
+        np.tile(np.arange(2), 3), np.ones(6),
+    )
+    monkeypatch.setattr(als_custom, "MAX_RATINGS", 6)
+    als(R, alternations=1)  # at the cap: fits
+    monkeypatch.setattr(als_custom, "MAX_RATINGS", 5)
+    with pytest.raises(ValueError, match="cap 5"):
+        als(R, alternations=1)
 
 
 def test_ivf_recall_concentrates_on_planted_clusters(spark):
