@@ -28,8 +28,7 @@ engines from exact sums, so the predicate cannot flip across engines.
 Scale notes: as in tpch_more.py — facts stay on the probe side,
 aggregation happens before joins where semantics allow, and explicit
 ``F.broadcast`` marks only structurally-small sides (nation, 1-row
-scalars, the per-part aggregate of a filtered 25x-selective part
-subset).  SF-proportional joins carry no hint (AQE decides).
+scalars).  SF-proportional joins carry no hint (AQE decides).
 """
 
 from __future__ import annotations
@@ -82,26 +81,28 @@ def q_tpch_q2_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-stable; ties break on s_suppkey.
 
     Plan shape: the correlated MIN-subquery of textbook Q2 is
-    decorrelated into one groupBy + ROW_NUMBER argmin — a single
-    shuffle on (l_partkey, l_suppkey) then a window on l_partkey,
-    instead of a per-part re-probe.  The part filter is applied
-    post-argmin (cheap: the argmin table is one row per (part,
-    supplier)); at 100 TB you would push the part-subset semi join
-    below the groupBy to shrink the shuffle — kept here in oracle
-    lockstep since DuckDB's optimizer does that pushdown itself."""
+    decorrelated into one groupBy + ROW_NUMBER argmin — a shuffle on
+    the (part, supplier) key then a window on the part, instead of a
+    per-part re-probe.  The part subset joins lineitem BELOW the
+    groupBy (p_partkey is unique, so the join only filters lines and
+    adds p_name, a function of the group's part), so only the subset's
+    pairs are aggregated and shuffled, and each table is read once.
+    The argmin of a part ranks that part's rows alone, so filtering
+    first gives the same rows."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") >= 40) & (F.col("p_type") == "SMALL")
     )
     s = load_table(spark, sf_dir, "supplier")
-    per_ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("min_cost")
+    per_ps = (
+        li.join(p, li.l_partkey == p.p_partkey)
+        .groupBy("p_partkey", "p_name", "l_suppkey")
+        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("min_cost"))
     )
-    w = Window.partitionBy("l_partkey").orderBy(F.asc("min_cost"), F.asc("l_suppkey"))
+    w = Window.partitionBy("p_partkey").orderBy(F.asc("min_cost"), F.asc("l_suppkey"))
     best = per_ps.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     return (
-        best.join(p, best.l_partkey == p.p_partkey)
-        .join(s, best.l_suppkey == s.s_suppkey)
+        best.join(s, best.l_suppkey == s.s_suppkey)
         .orderBy("p_partkey")
         .select(
             "p_partkey",
@@ -298,29 +299,21 @@ def q_tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue from orders of one brand whose quantity is below 20% of
     that part's average order quantity.
 
-    The correlated AVG subquery is decorrelated into one per-part
-    aggregate joined back to the fact — the classic rewrite that turns
-    a per-row re-probe into a single extra shuffle of group-level rows.
-    l_quantity is integral-valued DOUBLE, so SUM/COUNT (and hence AVG)
-    are exact and the ``< 0.2 * avg`` comparison is engine-stable.
-    The per-part average table inherits the brand filter's ~1/25
-    selectivity... but the threshold must average over ALL lineitems of
-    the part (not just brand-filtered rows match — the filter is on the
-    part dim, so the semi-joined aggregate is equivalent); at 100 TB
-    build the per-part aggregate from the part-filtered semi join, keep
-    it unhinted, and let AQE broadcast it when small."""
+    The correlated AVG subquery becomes a per-part window average
+    over the fact rows of the brand's parts: the brand filter is on
+    the part dim and the correlation key IS p_partkey, so semi-joining
+    the part subset first leaves every line of each kept part, and
+    the window averages exactly the lines the subquery would.  One
+    lineitem scan, one shuffle of the ~1/25 semi-joined lines, no
+    aggregate joined back.  l_quantity is integral-valued DOUBLE, so
+    SUM/COUNT (and hence AVG) are exact and the ``< 0.2 * avg``
+    comparison is engine-stable."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
-    # threshold per part over all its lineitems (part filter applied via
-    # semi join — equivalent because the correlation key IS p_partkey)
-    thresholds = (
-        li.join(p, li.l_partkey == p.p_partkey, "left_semi")
-        .groupBy(F.col("l_partkey").alias("t_partkey"))
-        .agg((F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold"))
-    )
+    per_part = Window.partitionBy("l_partkey")
     return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(thresholds, F.col("l_partkey") == F.col("t_partkey"))
+        li.join(p, li.l_partkey == p.p_partkey, "left_semi")
+        .withColumn("qty_threshold", F.lit(0.2) * F.avg("l_quantity").over(per_part))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
             (
@@ -374,13 +367,15 @@ def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     total 1995 volume — i.e. suppliers dominating a part's supply.
 
     Adaptation (no partsupp): ``ps_availqty`` becomes shipped quantity
-    from lineitem within the window.  The per-(supplier, part) and
-    per-part aggregates are built from the SAME filtered fact (one scan
-    in Spark — the plan reuses the cached filtered DataFrame via plan
-    dedup; the oracle spells it twice because DuckDB CTE-dedups it).
-    Quantity sums are exact (integral doubles), so the 30% predicate is
-    engine-stable.  Final step is a semi join into supplier — each
-    supplier emitted once, no distinct needed."""
+    from lineitem within the window.  The filtered fact is scanned
+    once and aggregated per (supplier, part); the per-part total is a
+    window sum over those pair rows (a part's volume is the sum of its
+    suppliers' volumes), so no second aggregate of the fact joins
+    back.  The filtered lines are repartitioned by part once, ahead of
+    the pair aggregation, and the part window reuses that
+    partitioning.  Quantity sums are exact (integral doubles), so the
+    30% predicate is engine-stable.  Final step is a semi join into
+    supplier — each supplier emitted once, no distinct needed."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget"))
     o = load_table(spark, sf_dir, "orders").filter(
@@ -388,17 +383,15 @@ def q_tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    facts = li.join(o, li.l_orderkey == o.o_orderkey).join(
-        p, li.l_partkey == p.p_partkey, "left_semi"
-    )
-    per_sp = facts.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum("l_quantity").alias("supp_qty")
-    )
-    per_p = facts.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
-        F.sum("l_quantity").alias("part_qty")
+    per_sp = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(p, li.l_partkey == p.p_partkey, "left_semi")
+        .repartition("l_partkey")
+        .groupBy("l_suppkey", "l_partkey")
+        .agg(F.sum("l_quantity").alias("supp_qty"))
     )
     dominating = (
-        per_sp.join(per_p, per_sp.l_partkey == per_p.t_partkey)
+        per_sp.withColumn("part_qty", F.sum("supp_qty").over(Window.partitionBy("l_partkey")))
         .filter(F.col("supp_qty") > F.lit(0.3) * F.col("part_qty"))
         .select("l_suppkey")
     )

@@ -225,11 +225,12 @@ def q_tpch_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume customers): orders whose total
     quantity exceeds a threshold, with customer detail.
 
-    The IN-subquery is an aggregate-then-semi-join: quantities are
-    summed per order FIRST (map-side partial agg over the fact
-    table), and only qualifying orderkeys join back — the cheapest
-    shape because the filter runs at group granularity before any
-    wide join."""
+    The IN-subquery is an aggregate-then-join: quantities are summed
+    per order FIRST (map-side partial agg over the fact table) and
+    filtered at group granularity before any wide join.  The oracle's
+    outer SUM(l_quantity) per order IS that per-order sum (o_orderkey
+    is unique, so each group is one order), so the qualifying sums
+    join orders and customer directly and lineitem is read once."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -237,14 +238,17 @@ def q_tpch_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("order_qty"))
         .filter(F.col("order_qty") > 250)
-        .select("l_orderkey")
     )
     return (
-        o.join(big.withColumnRenamed("l_orderkey", "big_key"), F.col("o_orderkey") == F.col("big_key"), "left_semi")
+        o.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .groupBy("c_name", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
+        .select(
+            "c_name",
+            "o_orderkey",
+            "o_orderdate",
+            "o_totalprice",
+            F.round("order_qty", 2).alias("sum_qty"),
+        )
     )
 
 
@@ -518,24 +522,34 @@ def q_tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY late one.
 
     The classic EXISTS(other supplier) AND NOT EXISTS(other LATE
-    supplier) double correlation, rewritten as per-order conditional
-    distinct counts — one aggregate pass instead of two correlated
-    probes, then a semi-ish join back at order granularity.  Late =
-    shipped >60 days after order date (fixture has no receipt/commit
-    dates)."""
+    supplier) double correlation, rewritten over one scan of
+    ``lineitem JOIN orders``: the lines collapse to (order, supplier,
+    late) pairs, and per-order window counts over those pairs give
+    ``n_supps`` and ``n_late_supps`` — no distinct aggregates, so no
+    ``Expand``, and no second fact scan for the late pairs.  The lines
+    are repartitioned by order once, ahead of the join to orders; the
+    join (broadcast, or sort-merge on that same key), the pair
+    aggregation and the order window all reuse that partitioning, so
+    only that one shuffle carries line-grain rows.  A null
+    ``l_suppkey`` pair counts toward neither count, as COUNT(DISTINCT)
+    ignores nulls, and joins no supplier.  Late = shipped >60 days
+    after order date (fixture has no receipt/commit dates)."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     s = load_table(spark, sf_dir, "supplier")
-    lo = li.join(o, li.l_orderkey == o.o_orderkey)
     is_late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    order_supps = lo.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.countDistinct(F.when(is_late, F.col("l_suppkey"))).alias("n_late_supps"),
+    pairs = (
+        li.repartition("l_orderkey")
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(F.max(F.when(is_late, 1).otherwise(0)).alias("late"))
     )
-    late = lo.filter(is_late).select("l_orderkey", "l_suppkey").distinct()
+    per_order = Window.partitionBy("l_orderkey")
+    supp_late = F.when(F.col("l_suppkey").isNotNull(), F.col("late"))
     return (
-        late.join(order_supps, "l_orderkey")
-        .filter((F.col("n_supps") > 1) & (F.col("n_late_supps") == 1))
+        pairs.withColumn("n_supps", F.count("l_suppkey").over(per_order))
+        .withColumn("n_late_supps", F.sum(supp_late).over(per_order))
+        .filter((F.col("late") == 1) & (F.col("n_supps") > 1) & (F.col("n_late_supps") == 1))
         .join(s, F.col("l_suppkey") == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))

@@ -45,3 +45,33 @@ def uses_python_eval(df: DataFrame) -> bool:
     ArrowEvalPython / mapInPandas...) — banned on hash-matched paths."""
     plan = physical_plan(df)
     return "EvalPython" in plan or "PythonMapInArrow" in plan or "MapInPandas" in plan
+
+
+def final_plan(df: DataFrame) -> str:
+    """The final adaptive plan of an executed DataFrame, without the
+    ``== Initial Plan ==`` sections (AQE prints one per adaptive plan,
+    nested ones included, and they show scans that were replanned)."""
+    plan = physical_plan(df)
+    if "isFinalPlan=false" in plan:
+        raise ValueError("final_plan needs the plan of an executed DataFrame")
+    kept: list[str] = []
+    cut = -1  # column of the "+- == Initial Plan ==" being skipped
+    for line in plan.splitlines():
+        if cut >= 0 and not line[: cut + 1].strip():
+            continue
+        cut = line.find("+- == Initial Plan ==")
+        if cut < 0:
+            kept.append(line)
+    return "\n".join(kept)
+
+
+def scan_count(df: DataFrame, table: str) -> int:
+    """Parquet ``FileScan``s of fixture ``table`` in the final plan of
+    an executed DataFrame.  A ``ReusedExchange`` re-reads shuffle
+    output, not the table, so it counts as no scan; a cached relation
+    prints its plan under every ``InMemoryTableScan`` of it but runs it
+    once, so identical scan lines count once."""
+    scans = re.findall(
+        rf"FileScan parquet [^\n]*/{re.escape(table)}\.parquet\][^\n]*", final_plan(df)
+    )
+    return len(set(scans))

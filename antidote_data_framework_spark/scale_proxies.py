@@ -132,6 +132,9 @@ SCALE_PROXIES: dict[str, str] = {
     "q_length_histogram": "q_agg_rollup",
     "q_link_prediction_adamic": "q_graph_triangles",
     # --- joins: JOIN pipelines over TPC-H tables ---
+    # q_tpch_q21_waiting is one fact scan joined to a dimension, one
+    # shuffle of the joined rows, then per-key aggregation: the growth
+    # shape of every equi-join pipeline here, not each one's operators.
     "q_join_inner": "q_tpch_q21_waiting",
     "q_join_broadcast": "q_tpch_q21_waiting",
     "q_join_5way_star": "q_tpch_q21_waiting",

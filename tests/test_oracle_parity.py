@@ -14,6 +14,8 @@ from __future__ import annotations
 import json
 import os
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
@@ -54,3 +56,26 @@ def test_query_vs_oracle(name, spark, duck, sf_dir):
     assert scols == dcols
     assert len(srows) == len(drows)
     assert srows == drows
+
+
+def test_q21_null_suppkey_counts_as_count_distinct(spark, duck, sf_dir, tmp_path):
+    """Q21 counts suppliers per order from (order, supplier) pairs,
+    where COUNT(DISTINCT l_suppkey) skips nulls.  The fixtures hold no
+    null supplier, so this nulls every 5th line's and re-runs the key
+    against its oracle on that copy: a null-supplier pair that counted
+    toward n_supps or n_late_supps would flip orders in or out."""
+    lineitem = duck.execute(
+        "SELECT * REPLACE (CASE WHEN l_linenumber % 5 = 0 THEN NULL"
+        " ELSE l_suppkey END AS l_suppkey) FROM lineitem"
+    ).arrow()
+    pq.write_table(lineitem, str(tmp_path / "lineitem.parquet"))
+    for name in ("orders", "supplier"):
+        pq.write_table(pq.read_table(f"{sf_dir}/{name}.parquet"), str(tmp_path / f"{name}.parquet"))
+    con = duckdb.connect()
+    for name in ("lineitem", "orders", "supplier"):
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{tmp_path}/{name}.parquet')")
+    want = canon_rows(con.execute(ORACLES["q_tpch_q21_waiting"]).fetchdf())
+    con.close()
+    got = canon_rows(QUERIES["q_tpch_q21_waiting"](spark, str(tmp_path)).toPandas())
+    assert got == want
+    assert want[1], "the nulled copy must still leave suppliers to count"

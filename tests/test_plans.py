@@ -9,9 +9,11 @@ import os
 import __spark_entry__ as entrymod
 from antidote_data_framework_spark.plans import (
     broadcast_join_count,
+    final_plan,
     has_partial_aggregation,
     physical_plan,
     pushed_filters,
+    scan_count,
     uses_python_eval,
 )
 
@@ -109,8 +111,7 @@ def test_bucketed_join_eliminates_join_shuffle(spark, sf_dir):
     the only Exchange allowed is the final small aggregation."""
     df = QUERIES["q_bucketed_join_noshuffle"](spark, sf_dir)
     df.collect()  # materialize so the AQE final plan exists
-    plan = physical_plan(df)
-    final = plan.split("== Initial Plan ==")[0]
+    final = final_plan(df)
     assert "SortMergeJoin" in final
     assert final.count("Bucketed: true") == 2
     join_subtree = final[final.index("SortMergeJoin"):]
@@ -130,6 +131,26 @@ def test_q4_semi_join_no_fanout(spark, sf_dir):
     most once), never an inner join + distinct."""
     plan = physical_plan(QUERIES["q_tpch_q4_priority"](spark, sf_dir))
     assert "LeftSemi" in plan
+
+
+def test_tpch_keys_read_lineitem_once(spark, sf_dir):
+    """Each TPC-H key reads the fact table once: a subplan two
+    operators share (Q17's per-part average, Q18's per-order sum,
+    Q20's per-part total, Q21's per-order supplier counts) is computed
+    from the one scan, not from a second scan joined back.  Q21's
+    per-order counts come from (order, supplier) pairs, not from two
+    COUNT(DISTINCT)s, which plan an ``Expand`` that doubles every
+    line."""
+    faults = {}
+    for name in sorted(k for k in QUERIES if k.startswith("q_tpch_")):
+        df = QUERIES[name](spark, sf_dir)
+        df.collect()  # the count reads the final adaptive plan
+        scans = scan_count(df, "lineitem")
+        if scans > 1:
+            faults[name] = f"{scans} lineitem scans"
+        if name == "q_tpch_q21_waiting" and "Expand" in final_plan(df):
+            faults[name] = faults.get(name, "") + " Expand"
+    assert not faults, faults
 
 
 def test_no_forced_broadcast_of_sf_proportional_tables():
